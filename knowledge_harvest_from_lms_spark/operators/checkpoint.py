@@ -90,11 +90,13 @@ def run_stage(
     # schema passed explicitly: an empty stage output writes no parquet
     # files, which would otherwise make the read-back uninferable
     out = _read(spark, dpath, schema_json)
+    # one scan: the row count is the sum of the per-partition counts
+    pcounts = partition_counts(out)
     man = {
         "stage": stage,
         "fingerprint": fingerprint,
-        "row_count": out.count(),
-        "partition_counts": partition_counts(out),
+        "row_count": sum(p["rows"] for p in pcounts),
+        "partition_counts": pcounts,
         "schema": out.schema.simpleString(),
         "schema_json": schema_json,
         "written_at": time.time(),

@@ -28,11 +28,14 @@ SHINGLE = 3
 
 
 def char_shingles(col, n: int = SHINGLE):
+    """Distinct character n-grams of ``col`` (space-padded), in
+    first-occurrence order; a string shorter than n yields its whole
+    padded form, NULL yields [NULL]."""
     padded = F.concat(F.lit(" "), col, F.lit(" "))
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length(padded) - (n - 1), F.lit(1))),
-            lambda i: F.substring(padded, 1, 0x7FFFFFF).substr(i, F.lit(n)),
+            lambda i: padded.substr(i, F.lit(n)),
         )
     )
 
@@ -50,6 +53,16 @@ def minhash_signature(grams_col, n_hashes: int = N_MINHASH):
         return F.array_min(F.transform(grams_col, lambda g: F.xxhash64(g, F.lit(i))))
 
     return F.array(*[perm_min(i) for i in range(n_hashes)])
+
+
+def _gram_postings(ents: DataFrame) -> DataFrame:
+    """(ent, gram) rows: one per distinct character 3-gram of ``ent``.
+
+    The gram array is exploded as an expression, not through a named
+    column: exploding a bare attribute makes the optimizer infer a
+    ``size(grams) > 0`` filter, and pushdown substitutes the alias into
+    it, so the shingle ``transform`` would run twice per entity."""
+    return ents.select("ent", F.explode(char_shingles(F.col("ent"))).alias("gram"))
 
 
 def _banded(
@@ -139,6 +152,9 @@ def lsh_candidate_pairs(
     #      unchanged, so the jaccard doubles are bit-identical.
     # The encoded table is localCheckpointed once and the verify runs
     # INSIDE the band join's stage — candidate pairs never shuffle.
+    # The posting stream (_gram_postings) is itself checkpointed once and
+    # feeds the dictionary, the minhash aggregates and the encoding, so
+    # each entity is shingled exactly once.
     # ------------------------------------------------------------------
     if n_bands is None:
         rows = 1
@@ -151,12 +167,7 @@ def lsh_candidate_pairs(
     else:
         rows = n_hashes // n_bands
 
-    post = (
-        ents.select("ent")
-        .withColumn("grams", char_shingles(F.col("ent")))
-        .select("ent", F.explode("grams").alias("gram"))
-        .localCheckpoint()
-    )
+    post = _gram_postings(ents).localCheckpoint()
     dict_df = (
         post.select("gram")
         .distinct()
@@ -295,12 +306,20 @@ def canonical_map(ents: DataFrame, pairs: DataFrame, max_iters: int = 16) -> Dat
     real inputs). The budget is therefore generous; the early break
     makes converged runs pay only for the iterations they use, plus
     one no-change detection pass. Non-convergence warns rather than
-    silently splitting a component (ADVICE r1)."""
+    silently splitting a component (ADVICE r1).
+
+    The undirected edge list is localCheckpointed once, before the
+    loop, so ``pairs`` (for LSH callers: the band join, the id
+    back-joins and their dedup) is evaluated once however many
+    iterations run. Each iteration's checkpoint carries the previous
+    label in the row (``_old``); convergence is a ``take(1)`` over that
+    checkpoint, with no join against the old labels."""
     import warnings
 
     edges = (
         pairs.select(F.col("ent_a").alias("x"), F.col("ent_b").alias("y"))
         .union(pairs.select(F.col("ent_b").alias("x"), F.col("ent_a").alias("y")))
+        .localCheckpoint()
     )
     labels = ents.select("ent", F.col("ent").alias("canonical"))
     converged = False
@@ -312,6 +331,7 @@ def canonical_map(ents: DataFrame, pairs: DataFrame, max_iters: int = 16) -> Dat
         )
         new = labels.join(neigh, labels.ent == neigh.x, "left").select(
             "ent",
+            F.col("canonical").alias("_old"),
             F.least(
                 F.col("canonical"), F.coalesce("n_min", F.col("canonical"))
             ).alias("canonical"),
@@ -325,19 +345,15 @@ def canonical_map(ents: DataFrame, pairs: DataFrame, max_iters: int = 16) -> Dat
             new.join(jump, new.canonical == jump._c, "left")
             .select(
                 "ent",
+                "_old",
                 F.least(
                     F.col("canonical"), F.coalesce("_cc", F.col("canonical"))
                 ).alias("canonical"),
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "ent")
-            .filter(F.col("n.canonical") != F.col("o.canonical"))
-            .take(1)
-        )
-        labels = new
+        changed = new.filter(F.col("canonical") != F.col("_old")).take(1)
+        labels = new.select("ent", "canonical")
         if not changed:
             converged = True
             break

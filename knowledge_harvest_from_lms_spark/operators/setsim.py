@@ -114,12 +114,17 @@ _BITS_INTER = (
 
 def _ordered_sets(df: DataFrame, id_col: str, set_col: str) -> DataFrame:
     """(id, toks array<string> sorted rarest-first, sz) — tokens
-    deduped, ordered by the global (df, token) total order."""
-    base = df.select(
+    deduped, ordered by the global (df, token) total order.
+
+    The deduped set is exploded as an expression, not through a named
+    column: exploding a bare attribute makes the optimizer infer a
+    ``size(set) > 0`` filter, and pushdown substitutes the alias into
+    it, so a computed ``set_col`` (q73/q80's gram ``transform``) would
+    be evaluated twice per record."""
+    tok = df.select(
         F.col(id_col).alias("__id"),
-        F.array_distinct(F.col(set_col)).alias("__s"),
+        F.explode(F.array_distinct(F.col(set_col))).alias("tok"),
     )
-    tok = base.select("__id", F.explode("__s").alias("tok"))
     dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     return (
         tok.join(dfreq, "tok")
@@ -150,7 +155,14 @@ def setsim_self_join(
     UNROUNDED value — an integer/integer double division both engines
     compute identically). Rows with NULL ids or NULL/empty sets are
     excluded (an empty set has no similarity-1 twin under Jaccard's
-    0/0 convention and would emit no prefix anyway)."""
+    0/0 convention and would emit no prefix anyway).
+
+    Building the plan runs Spark jobs: ``_bitmap_sets`` counts the
+    vocabulary (``vocab.count()``, which also materializes the lazily
+    checkpointed sets) and eagerly checkpoints the token dictionary.
+    The sets, dictionary and encoding are localCheckpointed, so their
+    blocks cannot be recomputed after an executor is lost; the
+    returned frame then fails instead of rebuilding them."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0,1], got {threshold}")
     t = float(threshold)
@@ -254,7 +266,12 @@ def containment_join(
 
     Exact: verified per candidate on the full arrays; the brute-force
     oracle (q80) replays it in DuckDB. Published value rounded at 9;
-    the threshold compares the unrounded int/int division."""
+    the threshold compares the unrounded int/int division.
+
+    As for ``setsim_self_join``, building the plan runs Spark jobs
+    (``vocab.count()`` and an eager dictionary checkpoint), and the
+    localCheckpointed sets, dictionary and encoding cannot be
+    recomputed after executor loss."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0,1], got {threshold}")
     t = float(threshold)

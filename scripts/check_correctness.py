@@ -7,10 +7,18 @@ CORRECTNESS_selfcheck.json. One command to know CORRECTNESS_r{N}
 will be green before the driver runs:
 
     python scripts/check_correctness.py [sf_dir]
+
+``--only q37,q38,...`` runs just the named entries (a full registry
+name or its ``qNN`` prefix) and writes CORRECTNESS_subset.json
+instead, leaving the full-run file untouched — a re-check of one
+operator family in minutes:
+
+    python scripts/check_correctness.py --only q73,q76,q79,q80
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -18,7 +26,28 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _selected(names, only: str | None) -> list[str]:
+    if not only:
+        return list(names)
+    wanted = {w.strip() for w in only.split(",") if w.strip()}
+    picked = [n for n in names if n in wanted or n.split("_")[0] in wanted]
+    matched = set(picked) | {n.split("_")[0] for n in picked}
+    unknown = sorted(wanted - matched)
+    if unknown:
+        raise SystemExit(f"unknown registry entries: {', '.join(unknown)}")
+    return picked
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(
+        description=__doc__.split("\n\n")[0], usage="%(prog)s [--only ONLY] [sf_dir]"
+    )
+    ap.add_argument(
+        "--only",
+        help="comma-separated entries (full name or qNN prefix); "
+        "writes CORRECTNESS_subset.json",
+    )
+    args, sys.argv[1:] = ap.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
     from knowledge_harvest_from_lms_spark.plans.oracle_check import (
@@ -33,7 +62,7 @@ def main() -> None:
 
     results: dict[str, dict] = {}
     n_green = n_rows_only = n_fail = 0
-    for name in QUERIES:
+    for name in _selected(QUERIES, args.only):
         entry: dict = {"ok": None, "issues": None, "err": None}
         try:
             issues = check_query(spark, con, name, sf_dir, QUERIES, ORACLES)
@@ -62,7 +91,7 @@ def main() -> None:
 
     out_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "CORRECTNESS_selfcheck.json",
+        "CORRECTNESS_subset.json" if args.only else "CORRECTNESS_selfcheck.json",
     )
     with open(out_path, "w") as f:
         json.dump(results, f, indent=2)

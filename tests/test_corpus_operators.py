@@ -249,6 +249,69 @@ def test_canonical_map_long_chain_converges(spark):
     assert set(cmap.values()) == {"ent00"}
 
 
+def _py_shingles(s, n=3):
+    """Pure-Python char_shingles: distinct n-grams of the space-padded
+    string in first-occurrence order; shorter-than-n strings give their
+    whole padded form, None gives [None]."""
+    if s is None:
+        return [None]
+    padded = f" {s} "
+    grams = [padded[i:i + n] for i in range(max(len(padded) - (n - 1), 1))]
+    return list(dict.fromkeys(grams))
+
+
+def test_char_shingles_match_python_reference(spark):
+    from knowledge_harvest_from_lms_spark.operators.graph import char_shingles
+
+    long = "".join(chr(ord("a") + (i * 7) % 26) for i in range(600)) + "ünï"
+    vals = ["", "a", "ab", None, "héllo wörld ✓ 北京", long]
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, s string")
+    got = {
+        r.i: r.g
+        for r in df.select("i", char_shingles(F.col("s")).alias("g")).collect()
+    }
+    for i, s in enumerate(vals):
+        assert got[i] == _py_shingles(s), (i, s)
+
+
+def test_canonical_map_evaluates_pairs_once(spark):
+    """The edge list is materialized before the loop: ``pairs`` is
+    evaluated once per union branch, however many label-propagation
+    iterations the graph needs."""
+    import warnings
+
+    from pyspark.sql.types import StringType
+
+    from knowledge_harvest_from_lms_spark.operators.graph import canonical_map
+
+    # ids decrease along the chain's odd steps, so pointer doubling
+    # needs more than 2 iterations (checked by the warning below)
+    order = [0, 9, 1, 8, 2, 7, 3, 6, 4, 5]
+    names = [f"ent{i:02d}" for i in order]
+    ents = spark.createDataFrame([(n,) for n in names], "ent string")
+    raw = spark.createDataFrame(
+        [(names[i], names[i + 1]) for i in range(len(names) - 1)],
+        "ent_a string, ent_b string",
+    )
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        canonical_map(ents, raw, max_iters=2).collect()
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(v):
+        seen.add(1)
+        return v
+
+    pairs = raw.select(
+        F.udf(count, StringType())("ent_a").alias("ent_a"), "ent_b"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        cmap = {r.ent: r.canonical for r in canonical_map(ents, pairs).collect()}
+    assert set(cmap.values()) == {"ent00"}
+    assert seen.value == 2 * (len(names) - 1)
+
+
 def test_entity_mentions_grounding(spark, pages):
     ents = spark.createDataFrame(
         [("giraffes",), ("africa",), ("zzznothing",)], "ent string"

@@ -527,3 +527,37 @@ def test_q123_transe_energies_no_explode_no_window(spark):
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
     assert "Generate" not in plan
+
+
+def _filters_with_transform(df) -> list[str]:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if "Filter" in ln and "transform(" in ln]
+
+
+def test_similarity_gram_explodes_infer_no_transform_filter(spark):
+    """The gram arrays of the LSH posting stream and of setsim's
+    ordered sets are exploded as expressions: exploding a named column
+    makes the optimizer infer a size(...) > 0 Filter, into which
+    pushdown substitutes the gram transform — a second evaluation of
+    every gram array (and, for q73/q80, of the 120-char substring
+    inlined into the lambda)."""
+    from pyspark.sql import functions as F
+
+    from knowledge_harvest_from_lms_spark.operators.graph import _gram_postings
+    from knowledge_harvest_from_lms_spark.operators.setsim import _ordered_sets
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    ents = docs.select(F.substring("text", 1, 512).alias("ent"))
+    assert _filters_with_transform(_gram_postings(ents)) == []
+
+    pre = docs.select("doc_id", F.substring("text", 1, 120).alias("__t"))
+    grams = pre.select(
+        "doc_id",
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.length("__t") - 2),
+                lambda i: F.col("__t").substr(i, F.lit(3)),
+            )
+        ).alias("g"),
+    )
+    assert _filters_with_transform(_ordered_sets(grams, "doc_id", "g")) == []

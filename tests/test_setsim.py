@@ -8,9 +8,33 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from knowledge_harvest_from_lms_spark.operators import setsim
 from knowledge_harvest_from_lms_spark.operators.setsim import (
     setsim_self_join,
 )
+
+
+def _kernel_params(ts):
+    """(t, kernel) cases over both verify kernels: the bitmap kernel
+    keeps the bare threshold id, the array_intersect fallback adds an
+    ``-array`` suffix."""
+    return [
+        pytest.param(t, kernel, id=f"{t}{suffix}")
+        for kernel, suffix in (("bitmap", ""), ("array", "-array"))
+        for t in ts
+    ]
+
+
+def _use_kernel(monkeypatch, kernel):
+    """Force the array_intersect fallback by making every vocabulary
+    exceed the bitmap cutover."""
+    if kernel == "array":
+        monkeypatch.setattr(setsim, "_MAX_BITMAP_VOCAB", 0)
+
+
+def _assert_kernel(res, kernel):
+    plan = res._jdf.queryExecution().optimizedPlan().toString()
+    assert ("array_intersect" in plan) == (kernel == "array"), kernel
 
 
 def _brute(rows, t):
@@ -40,16 +64,16 @@ def _fixture(n=120, universe=40, seed=7):
     return rows
 
 
-@pytest.mark.parametrize("t", [0.5, 0.8, 1.0])
-def test_matches_brute_force(spark, t):
+@pytest.mark.parametrize("t,kernel", _kernel_params([0.5, 0.8, 1.0]))
+def test_matches_brute_force(spark, monkeypatch, t, kernel):
+    _use_kernel(monkeypatch, kernel)
     rows = _fixture()
     df = spark.createDataFrame(
         [(i, sorted(s)) for i, s in rows], "id long, s array<string>"
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in setsim_self_join(df, "id", "s", t).collect()
-    }
+    res = setsim_self_join(df, "id", "s", t)
+    _assert_kernel(res, kernel)
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in res.collect()}
     want = _brute(rows, t)
     assert got.keys() == want.keys()
     for k in want:
@@ -119,8 +143,9 @@ def _brute_containment(rows, t):
     return out
 
 
-@pytest.mark.parametrize("t", [0.6, 0.8, 1.0])
-def test_containment_matches_brute_force(spark, t):
+@pytest.mark.parametrize("t,kernel", _kernel_params([0.6, 0.8, 1.0]))
+def test_containment_matches_brute_force(spark, monkeypatch, t, kernel):
+    _use_kernel(monkeypatch, kernel)
     rows = _fixture()
     # plant a strict subset pair: a tiny doc inside a big one —
     # symmetric jaccard misses it, containment must not
@@ -130,10 +155,9 @@ def test_containment_matches_brute_force(spark, t):
     df = spark.createDataFrame(
         [(i, sorted(s)) for i, s in rows], "id long, s array<string>"
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["containment"]
-        for r in containment_join(df, "id", "s", t).collect()
-    }
+    res = containment_join(df, "id", "s", t)
+    _assert_kernel(res, kernel)
+    got = {(r["id_a"], r["id_b"]): r["containment"] for r in res.collect()}
     want = _brute_containment(rows, t)
     assert got.keys() == want.keys()
     for k in want:
