@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from . import bitsets
+
 N_MINHASH = 32
 SHINGLE = 3
 
@@ -65,22 +67,30 @@ def _gram_postings(ents: DataFrame) -> DataFrame:
     return ents.select("ent", F.explode(char_shingles(F.col("ent"))).alias("gram"))
 
 
+def _band_shape(
+    sim_threshold: float, n_hashes: int, n_bands: int | None
+) -> tuple[int, int]:
+    """(rows per band, bands). Unless ``n_bands`` is given, rows is the
+    LARGEST r (most selective buckets) whose candidate recall for a
+    pair AT the threshold, 1-(1-t^r)^(n_hashes//r), stays >= 0.9 —
+    e.g. r=2/b=16 at t=0.5, r=3/b=10 at t=0.7, r=7/b=4 at t=0.9 with 32
+    hashes (a fixed 8x4 banding had only ~0.89 recall at t=0.7 and
+    ~0.4 at t=0.5; and deriving b first then recomputing
+    rows = n_hashes//b inflated r past the guarantee)."""
+    if n_bands is not None:
+        return n_hashes // n_bands, n_bands
+    for r in range(min(n_hashes, 30), 0, -1):
+        if (1.0 - sim_threshold**r) ** (n_hashes // r) <= 0.1:
+            return r, max(1, n_hashes // r)
+    return 1, n_hashes
+
+
 def _banded(
     ents: DataFrame, sim_threshold: float, n_hashes: int, n_bands: int | None
 ) -> DataFrame:
     """(ent, grams, band, bucket) rows — the shared LSH banding of an
-    entity column (threshold-aware rows-per-band derivation documented
-    on lsh_candidate_pairs)."""
-    if n_bands is None:
-        rows = 1
-        for r in range(min(n_hashes, 30), 0, -1):
-            b = n_hashes // r
-            if (1.0 - sim_threshold**r) ** b <= 0.1:
-                rows = r
-                break
-        n_bands = max(1, n_hashes // rows)
-    else:
-        rows = n_hashes // n_bands
+    entity column, shaped by ``_band_shape``."""
+    rows, n_bands = _band_shape(sim_threshold, n_hashes, n_bands)
     sig = (
         ents.select("ent")
         .withColumn("grams", char_shingles(F.col("ent")))
@@ -120,62 +130,17 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """ents(ent) → (ent_a, ent_b, jaccard) for near-duplicates.
 
-    Banding: equal band-hash → candidate; candidates verified with
-    exact 3-gram Jaccard (JVM array ops). Rows-per-band derive from
-    the threshold: the LARGEST r (most selective buckets) whose
-    candidate recall for a pair AT the threshold,
-    1-(1-t^r)^(n_hashes//r), stays ≥ 0.9 — e.g. r=2/b=16 at t=0.5,
-    r=3/b=10 at t=0.7, r=7/b=4 at t=0.9 (a fixed 8×4 banding had only
-    ~0.89 recall at t=0.7 and ~0.4 at t=0.5; and deriving b first then
-    recomputing rows = n_hashes//b inflated r past the guarantee)."""
-    # ------------------------------------------------------------------
-    # r6 rewrite (guide §8 "decide with small rows" + §2.3/§2.4). The
-    # r5 shape carried BOTH gram arrays through the bucket join and a
-    # dropDuplicates exchange, then verified each candidate with an
-    # interpreted string array_intersect — on a corpus whose docs are
-    # genuinely similar (dense 3-gram vocabulary) the banding prunes
-    # little, and q40 at sf0.1 ran >15 min. Three changes, all
-    # value-exact:
-    #   1. minhash values come from 32 codegen'd MIN aggregates over
-    #      the exploded (ent, gram) posting stream — min over the same
-    #      distinct gram set of the same xxhash64(gram, i), so the
-    #      signatures (and band buckets, and therefore the oracle-
-    #      replayed candidate set) are hash-for-hash IDENTICAL to the
-    #      interpreted transform/array_min they replace;
-    #   2. each pair is emitted exactly once, at its FIRST shared
-    #      band (no bucket collision in any earlier band), replacing
-    #      the payload-heavy dropDuplicates exchange;
-    #   3. verification intersects dense-dictionary bitmaps
-    #      (bit_count over AND of ceil(V/64) words; dictionary built
-    #      over the corpus vocabulary, collision-free by construction)
-    #      instead of string arrays. Integer |inter| and sizes are
-    #      unchanged, so the jaccard doubles are bit-identical.
-    # The encoded table is localCheckpointed once and the verify runs
-    # INSIDE the band join's stage — candidate pairs never shuffle.
-    # The posting stream (_gram_postings) is itself checkpointed once and
-    # feeds the dictionary, the minhash aggregates and the encoding, so
-    # each entity is shingled exactly once.
-    # ------------------------------------------------------------------
-    if n_bands is None:
-        rows = 1
-        for r in range(min(n_hashes, 30), 0, -1):
-            b = n_hashes // r
-            if (1.0 - sim_threshold**r) ** b <= 0.1:
-                rows = r
-                break
-        n_bands = max(1, n_hashes // rows)
-    else:
-        rows = n_hashes // n_bands
-
+    Banding (``_band_shape``): equal band-hash → candidate. The
+    minhash values are 32 codegen'd MIN aggregates over the exploded
+    (ent, gram) posting stream, computed in the same ``groupBy`` that
+    encodes each entity's gram set for ``bitsets``; each pair is
+    emitted once, at its FIRST shared band (no bucket collision in any
+    earlier band), and verified there with the exact bitset
+    intersection, so candidate pairs never shuffle. The posting
+    stream and the encoded table are each localCheckpointed once, so
+    every entity is shingled once."""
+    rows, n_bands = _band_shape(sim_threshold, n_hashes, n_bands)
     post = _gram_postings(ents).localCheckpoint()
-    dict_df = (
-        post.select("gram")
-        .distinct()
-        .withColumn("idx", F.row_number().over(W.orderBy("gram")) - 1)
-    ).localCheckpoint()
-    dims = F.broadcast(
-        dict_df.agg((F.floor(F.max("idx") / 64) + 1).cast("int").alias("nw"))
-    )
     minaggs = [
         F.min(F.xxhash64("gram", F.lit(i))).alias(f"_h{i}") for i in range(n_hashes)
     ]
@@ -194,39 +159,21 @@ def lsh_candidate_pairs(
         ]
     )
     enc = (
-        post.join(F.broadcast(dict_df), "gram")
-        .groupBy("ent")
-        .agg(F.count(F.lit(1)).alias("sz"), F.collect_list("idx").alias("ix"), *minaggs)
-        .crossJoin(dims)
-        .select(
-            "ent",
-            "sz",
-            F.expr(
-                "transform(sequence(0, nw - 1), w -> aggregate(ix, bigint(0), "
-                "(acc, i) -> if(i div 64 = w, acc | shiftleft(bigint(1), i % 64), acc)))"
-            ).alias("bits"),
-            buckets.alias("bks"),
-        )
+        bitsets.encode(post, ["ent"], "gram", *minaggs)
+        .withColumn("bks", buckets)
+        .drop(*[f"_h{i}" for i in range(n_hashes)])
         .localCheckpoint()
     )
-    a = enc.select(
-        F.col("ent").alias("ent_a"), F.col("sz").alias("sza"),
-        F.col("bits").alias("ba"), F.col("bks").alias("bka"),
-        F.posexplode("bks").alias("band", "bucket"),
-    )
-    b = enc.select(
-        F.col("ent").alias("ent_b"), F.col("sz").alias("szb"),
-        F.col("bits").alias("bb"), F.col("bks").alias("bkb"),
-        F.posexplode("bks").alias("band", "bucket"),
+    a, b = (
+        bitsets.side(enc, t).select("*", F.posexplode(f"bks_{t}").alias("band", "bucket"))
+        for t in ("a", "b")
     )
     first_band = F.expr(
-        "size(filter(zip_with(slice(bka, 1, band), slice(bkb, 1, band), "
+        "size(filter(zip_with(slice(bks_a, 1, band), slice(bks_b, 1, band), "
         "(x, y) -> x = y), v -> v)) = 0"
     )
-    inter = F.expr(
-        "aggregate(zip_with(ba, bb, (x, y) -> bit_count(x & y)), 0, (acc, e) -> acc + e)"
-    )
-    jac = inter / (F.col("sza") + F.col("szb") - inter)
+    inter = bitsets.intersection("a", "b")
+    jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
     cond = (
         (F.col("ent_a") < F.col("ent_b"))
         & first_band

@@ -35,9 +35,11 @@ consulted:
    the lossless length filter ``least(|a|,|b|) >= t*greatest`` in
    the join condition (cheap-first, the repo-wide join-ordering
    rule), then ``distinct`` pairs.
-4. **Verify** exact Jaccard by joining the full sorted-token arrays
-   back for the candidate pairs only: |union| = |a|+|b|-|inter| (the
-   arrays are distinct), one O(n·m) intersect per candidate.
+4. **Verify** exact Jaccard by joining each record's set, encoded
+   once as a ``bitsets`` bitmap plus overflow array, back for the
+   candidate pairs only: |union| = |a|+|b|-|inter| (the sets are
+   distinct), |inter| being a few codegen'd ``bit_count`` terms per
+   candidate.
 
 Scale: the only corpus-wide shuffles are the token-df aggregate
 (vocab-bounded after partials), the df join back onto the exploded
@@ -57,59 +59,9 @@ the brute force in DuckDB at sf0.01.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-# Verify-kernel cutover (r6): vocabularies at or below this size use
-# dense-dictionary bitmap intersections (ceil(V/64) BIGINT words per
-# record, <= 8 KB/row); larger vocabularies keep the array_intersect
-# path whose per-row cost does not depend on V.
-_MAX_BITMAP_VOCAB = 65536
-
-
-def _bitmap_sets(sets: DataFrame) -> DataFrame | None:
-    """(__id, sz, bits) bitmap encoding of ``_ordered_sets`` output,
-    or None when the vocabulary exceeds ``_MAX_BITMAP_VOCAB``.
-
-    r6 (guide §4.1, the q14 lesson): the per-candidate
-    ``array_intersect`` on string arrays is interpreted — a hash set
-    per call — and dominated q73/q76/q79/q80 wall time. Each record's
-    token set is encoded ONCE as bitmap words over a dense,
-    collision-free dictionary (row_number over the distinct vocab —
-    bounded by the guard, so the single-partition window is fine);
-    |intersection| per pair becomes codegen'd bit_count(a & b) folds.
-    Integer cardinalities are unchanged, so downstream int/int double
-    divisions are bit-identical to the array formulation."""
-    vocab = sets.select(F.explode("toks").alias("tok")).distinct()
-    nv = vocab.count()
-    if nv == 0 or nv > _MAX_BITMAP_VOCAB:
-        return None
-    dic = vocab.withColumn(
-        "idx", F.row_number().over(W.orderBy("tok")) - 1
-    ).localCheckpoint()
-    nw = (nv + 63) // 64
-    return (
-        sets.select("__id", "sz", F.explode("toks").alias("tok"))
-        .join(F.broadcast(dic), "tok")
-        .groupBy("__id", "sz")
-        .agg(F.collect_list("idx").alias("ix"))
-        .select(
-            "__id",
-            "sz",
-            F.expr(
-                f"transform(sequence(0, {nw - 1}), w -> aggregate(ix, "
-                "bigint(0), (acc, i) -> if(i div 64 = w, "
-                "acc | shiftleft(bigint(1), i % 64), acc)))"
-            ).alias("bits"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-
-_BITS_INTER = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x & y)), 0, "
-    "(acc, e) -> acc + e)"
-)
+from . import bitsets
 
 
 def _ordered_sets(df: DataFrame, id_col: str, set_col: str) -> DataFrame:
@@ -139,6 +91,31 @@ def _ordered_sets(df: DataFrame, id_col: str, set_col: str) -> DataFrame:
     )
 
 
+def _verified(
+    cand: DataFrame, sets: DataFrame, t: float, sim, out_a: str, out_b: str,
+    out_sim: str,
+) -> DataFrame:
+    """The verify tail of both joins: each candidate ``(__ia, __ib)``
+    joined to the two records' bitset encodings (``bitsets``), kept
+    where ``sim(|A ∩ B|, |A|, |B|) >= t`` — the unrounded int/int
+    division — and published rounded at 9."""
+    enc = bitsets.encode(
+        sets.select("__id", F.explode("toks").alias("tok")), ["__id"], "tok"
+    )
+    s = sim(bitsets.intersection("a", "b"), F.col("sz_a"), F.col("sz_b"))
+    return (
+        cand.toDF("__id_a", "__id_b")
+        .join(bitsets.side(enc, "a"), "__id_a")
+        .join(bitsets.side(enc, "b"), "__id_b")
+        .filter(s >= F.lit(t))
+        .select(
+            F.col("__id_a").alias(out_a),
+            F.col("__id_b").alias(out_b),
+            F.round(s, 9).alias(out_sim),
+        )
+    )
+
+
 def setsim_self_join(
     df: DataFrame,
     id_col: str,
@@ -157,22 +134,16 @@ def setsim_self_join(
     excluded (an empty set has no similarity-1 twin under Jaccard's
     0/0 convention and would emit no prefix anyway).
 
-    Building the plan runs Spark jobs: ``_bitmap_sets`` counts the
-    vocabulary (``vocab.count()``, which also materializes the lazily
-    checkpointed sets) and eagerly checkpoints the token dictionary.
-    The sets, dictionary and encoding are localCheckpointed, so their
-    blocks cannot be recomputed after an executor is lost; the
-    returned frame then fails instead of rebuilding them."""
+    Building the plan runs no Spark job. The sets feed the prefix
+    stream, the dictionary and the encoding; those consumers share
+    their shuffle output through exchange reuse, not a checkpoint, so
+    the returned frame recomputes after an executor is lost."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0,1], got {threshold}")
     t = float(threshold)
     sets = _ordered_sets(
         df.filter(F.col(id_col).isNotNull()), id_col, set_col
     ).filter(F.col("sz") > 0)
-    # feeds the prefix stream AND two verify probes; without the lazy
-    # checkpoint Catalyst clones the df-join/re-collect subtree per
-    # consumer (the measured-4x lesson from the q56 flagged set)
-    sets = sets.localCheckpoint(eager=False)
 
     p = (F.col("sz") - F.ceil(F.lit(t) * F.col("sz") - F.lit(1e-9)) + 1).cast(
         "int"
@@ -203,38 +174,8 @@ def setsim_self_join(
         .select("__ia", "__ib")
         .distinct()
     )
-    enc = _bitmap_sets(sets)
-    if enc is not None:
-        a = enc.select(
-            F.col("__id").alias("__ia"),
-            F.col("sz").alias("__na"),
-            F.col("bits").alias("__ba"),
-        )
-        b = enc.select(
-            F.col("__id").alias("__ib"),
-            F.col("sz").alias("__nb"),
-            F.col("bits").alias("__bb"),
-        )
-        inter = F.expr(_BITS_INTER.format(a="__ba", b="__bb"))
-        jac = inter / (F.col("__na") + F.col("__nb") - inter)
-    else:
-        a = sets.select(
-            F.col("__id").alias("__ia"), F.col("toks").alias("__ta")
-        )
-        b = sets.select(
-            F.col("__id").alias("__ib"), F.col("toks").alias("__tb")
-        )
-        inter = F.size(F.array_intersect("__ta", "__tb"))
-        jac = inter / (F.size("__ta") + F.size("__tb") - inter)
-    return (
-        cand.join(a, "__ia")
-        .join(b, "__ib")
-        .filter(jac >= F.lit(t))
-        .select(
-            F.col("__ia").alias(out_a),
-            F.col("__ib").alias(out_b),
-            F.round(jac, 9).alias(out_sim),
-        )
+    return _verified(
+        cand, sets, t, lambda n, na, nb: n / (na + nb - n), out_a, out_b, out_sim
     )
 
 
@@ -264,21 +205,18 @@ def containment_join(
     still a RAREST token of A, so hot tokens stay out of the join's
     bucket distribution exactly as in the symmetric case.
 
-    Exact: verified per candidate on the full arrays; the brute-force
+    Exact: verified per candidate on the full sets; the brute-force
     oracle (q80) replays it in DuckDB. Published value rounded at 9;
     the threshold compares the unrounded int/int division.
 
-    As for ``setsim_self_join``, building the plan runs Spark jobs
-    (``vocab.count()`` and an eager dictionary checkpoint), and the
-    localCheckpointed sets, dictionary and encoding cannot be
-    recomputed after executor loss."""
+    As for ``setsim_self_join``, building the plan runs no Spark job,
+    and the returned frame recomputes after executor loss."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0,1], got {threshold}")
     t = float(threshold)
     sets = _ordered_sets(
         df.filter(F.col(id_col).isNotNull()), id_col, set_col
     ).filter(F.col("sz") > 0)
-    sets = sets.localCheckpoint(eager=False)
 
     p = (F.col("sz") - F.ceil(F.lit(t) * F.col("sz") - F.lit(1e-9)) + 1).cast(
         "int"
@@ -303,32 +241,6 @@ def containment_join(
         .select("__ia", "__ib")
         .distinct()
     )
-    enc = _bitmap_sets(sets)
-    if enc is not None:
-        a = enc.select(
-            F.col("__id").alias("__ia"),
-            F.col("sz").alias("__na"),
-            F.col("bits").alias("__ba"),
-        )
-        b = enc.select(
-            F.col("__id").alias("__ib"), F.col("bits").alias("__bb")
-        )
-        cont = F.expr(_BITS_INTER.format(a="__ba", b="__bb")) / F.col("__na")
-    else:
-        a = sets.select(
-            F.col("__id").alias("__ia"), F.col("toks").alias("__ta")
-        )
-        b = sets.select(
-            F.col("__id").alias("__ib"), F.col("toks").alias("__tb")
-        )
-        cont = F.size(F.array_intersect("__ta", "__tb")) / F.size("__ta")
-    return (
-        cand.join(a, "__ia")
-        .join(b, "__ib")
-        .filter(cont >= F.lit(t))
-        .select(
-            F.col("__ia").alias(out_a),
-            F.col("__ib").alias(out_b),
-            F.round(cont, 9).alias(out_sim),
-        )
+    return _verified(
+        cand, sets, t, lambda n, na, nb: n / na, out_a, out_b, out_sim
     )

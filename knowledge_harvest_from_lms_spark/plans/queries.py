@@ -422,115 +422,57 @@ FROM ranked WHERE rn <= 5 GROUP BY word
 # N-gram Jaccard near-dup pairs (J8 / dedup family)
 # ---------------------------------------------------------------------------
 
-# Bitmap width for q14's dense gram dictionary: 8 words = 512 bits per
-# doc. Grams ranked > 512 per lang (rarest, by global doc-frequency)
-# spill into an exact overflow int-array, so the encoding stays EXACT
-# at any vocabulary size — the fixed width only bounds the fast path.
-_Q14_NW = 8
+def _head_grams(docs, n_chars, *keep):
+    """(frame, grams): ``docs``' ``keep`` columns plus its first
+    ``n_chars`` characters, and the distinct char-3-gram array of that
+    prefix over the frame. The prefix is materialized BEFORE the gram
+    transform: a lambda referencing ``substring(text, 1, n)`` directly
+    re-evaluates it per gram (~n times per doc; measured 2.7 s ->
+    1.35 s on q14's posting stream alone)."""
+    pre = docs.select(*keep, F.substring("text", 1, n_chars).alias("__t"))
+    return pre, F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.length("__t") - 2),
+            lambda i: F.col("__t").substr(i, F.lit(3)),
+        )
+    )
 
 
 def q14_ngram_jaccard_pairs(spark, sf_dir):
-    # r6 rewrite (spark_optimization_guide §1.2 "the distributed
-    # algorithm" + §4.1 "prefer codegen'd built-ins"): the r5 shape
-    # evaluated array_intersect on two 58-element STRING arrays inside
-    # the join condition — interpreted, hash-set-per-call, twice per
-    # pair (numerator + denominator) — at ~300 us/pair over the ~13M
-    # same-lang candidate pairs at sf1.0 (116 s driver-measured).
-    # Candidate pruning cannot help here: the gram vocabulary is tiny
-    # (~377/lang) and dense, so nearly every same-lang pair shares
-    # grams (measured 6.65M candidates, avg |inter| 13.7). Instead the
-    # gram set of each doc is encoded ONCE as a fixed-width bitmap over
-    # a dense per-lang dictionary (indices ranked by doc-frequency
-    # desc), and |intersection| per pair becomes 8 codegen'd
-    # bit_count(a & b) terms — ~0.1 us/pair. Exactness: the dictionary
-    # is dense (no hash collisions), and indices >= 512 — the RAREST
-    # grams, none at current vocab sizes — are matched exactly via a
-    # short-circuited overflow array_intersect. Verified byte-identical
-    # to the r5 formulation at sf0.001/0.01/0.1/1.0 (302,392 rows at
-    # sf1.0). 131 s -> 6.3 s at sf1.0, local[32].
+    """Anchored char-3-gram Jaccard pairs within a language: every doc
+    with ``doc_id % 50 == 0`` against every later doc, jac >= 0.3.
+    The gram vocabulary is small and dense, so nearly every same-lang
+    pair shares grams and candidate pruning cannot help; each doc's
+    gram set is encoded once by ``operators.bitsets`` instead."""
+    from ..operators import bitsets
+
     docs = _t(spark, sf_dir, "documents")
-    # materialize the 60-char prefix BEFORE the gram transform: a
-    # lambda referencing substring(text,1,60) directly re-evaluates it
-    # per gram (58x per doc; measured 2.7 s -> 1.35 s on the posting
-    # stream alone).
-    pre = docs.select("doc_id", "lang", F.substring("text", 1, 60).alias("t"))
-    g = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.length("t") - 2),
-            lambda i: F.col("t").substr(i, F.lit(3)),
-        )
-    )
+    pre, g = _head_grams(docs, 60, "doc_id", "lang")
     # one posting pass, localCheckpointed: the dictionary AND the
-    # per-doc encodings both derive from it (otherwise the explode
-    # subtree runs 3x: others-postings, dict, anchor-postings).
+    # per-doc encodings both derive from it
     post = pre.select("doc_id", "lang", F.explode(g).alias("gram")).localCheckpoint()
-    dict_df = (
-        post.groupBy("lang", "gram")
-        .count()
-        .withColumn(
-            "idx",
-            F.row_number().over(W.partitionBy("lang").orderBy(F.desc("count"), "gram"))
-            - 1,
-        )
-        .drop("count")
-    ).localCheckpoint()
-    aggs = [
-        F.expr(
-            f"bit_or(if(idx div 64 = {w}, shiftleft(bigint(1), idx % 64), bigint(0)))"
-        ).alias(f"b{w}")
-        for w in range(_Q14_NW)
-    ]
-    aggs.append(
-        F.expr(f"collect_list(case when idx >= {_Q14_NW * 64} then idx end)").alias("ov")
-    )
-    # post is doc-distinct (array_distinct above), so count(*) == |gram set|
-    aggs.append(F.count(F.lit(1)).alias("sz"))
-    bm = (
-        post.join(F.broadcast(dict_df), ["lang", "gram"])
-        .groupBy("doc_id", "lang")
-        .agg(*aggs)
-    ).localCheckpoint()
-    acols = [
-        F.col("doc_id").alias("ia"),
-        F.col("lang").alias("la"),
-        F.col("sz").alias("sza"),
-        F.col("ov").alias("ova"),
-    ] + [F.col(f"b{w}").alias(f"a{w}") for w in range(_Q14_NW)]
-    anchors = bm.filter(F.col("doc_id") % 50 == 0).select(*acols)
-    bcols = [
-        F.col("doc_id").alias("ib"),
-        F.col("lang").alias("lb"),
-        F.col("sz").alias("szb"),
-        F.col("ov").alias("ovb"),
-    ] + [F.col(f"b{w}").alias(f"c{w}") for w in range(_Q14_NW)]
-    others = bm.select(*bcols)
-    popc = sum(
-        [F.bit_count(F.col(f"a{w}").bitwiseAND(F.col(f"c{w}"))) for w in range(_Q14_NW)],
-        F.lit(0),
-    )
-    # overflow intersect behind an IF: array_intersect allocates a hash
-    # set per evaluation even on empty arrays (~15 us/pair measured —
-    # it alone took the join stage from 0.5 s to 3.4 s).
-    ovpart = F.when((F.size("ova") == 0) | (F.size("ovb") == 0), F.lit(0)).otherwise(
-        F.size(F.array_intersect("ova", "ovb"))
-    )
-    inter = popc + ovpart
-    jac = F.round(inter / (F.col("sza") + F.col("szb") - inter), 4)
+    bm = bitsets.encode(post, ["doc_id", "lang"], "gram").localCheckpoint()
+    anchors = bitsets.side(bm.filter(F.col("doc_id") % 50 == 0), "a")
+    others = bitsets.side(bm, "b")
+    inter = bitsets.intersection("a", "b")
+    jac = F.round(inter / (F.col("sz_a") + F.col("sz_b") - inter), 4)
     # The full predicate lives IN the join condition, cheap-first:
     # post-join filters would get AND-ed in FRONT of ia<ib by the
     # pushdown rule, making every pair pay the intersection before
     # the cheap long compare (observed in the r3 plan audit). The
     # size-ratio prefilter is lossless: jaccard <= min|.|/max|.|.
     cond = (
-        (F.col("la") == F.col("lb"))
-        & (F.col("ia") < F.col("ib"))
-        & (F.least("sza", "szb") >= 0.3 * F.greatest("sza", "szb"))
+        (F.col("lang_a") == F.col("lang_b"))
+        & (F.col("doc_id_a") < F.col("doc_id_b"))
+        & (F.least("sz_a", "sz_b") >= 0.3 * F.greatest("sz_a", "sz_b"))
         & (jac >= 0.3)
     )
     return (
         F.broadcast(anchors)
         .join(others, cond)
-        .select("ia", "ib", jac.alias("jac"))
+        .select(
+            F.col("doc_id_a").alias("ia"), F.col("doc_id_b").alias("ib"), jac.alias("jac")
+        )
     )
 
 
@@ -3755,20 +3697,8 @@ def q73_setsim_exact_pairs(spark, sf_dir):
     from ..operators.setsim import setsim_self_join
 
     docs = _t(spark, sf_dir, "documents")
-    # r6: materialize the 120-char prefix BEFORE the gram transform —
-    # a lambda referencing substring(text,1,120) directly re-evaluates
-    # the substring per gram (118x per doc; the q14 posting-stream
-    # finding). Same expression values, same grams.
-    pre = docs.select("doc_id", F.substring("text", 1, 120).alias("__t"))
-    grams = pre.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length("__t") - 2),
-                lambda i: F.col("__t").substr(i, F.lit(3)),
-            )
-        ).alias("g"),
-    )
+    pre, g = _head_grams(docs, 120, "doc_id")
+    grams = pre.select("doc_id", g.alias("g"))
     return setsim_self_join(
         grams, "doc_id", "g", 0.5, out_a="ia", out_b="ib", out_sim="jac"
     )
@@ -3890,20 +3820,8 @@ def q76_connected_components(spark, sf_dir):
     from ..operators.setsim import setsim_self_join
 
     docs = _t(spark, sf_dir, "documents")
-    # r6: materialize the 120-char prefix BEFORE the gram transform —
-    # a lambda referencing substring(text,1,120) directly re-evaluates
-    # the substring per gram (118x per doc; the q14 posting-stream
-    # finding). Same expression values, same grams.
-    pre = docs.select("doc_id", F.substring("text", 1, 120).alias("__t"))
-    grams = pre.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length("__t") - 2),
-                lambda i: F.col("__t").substr(i, F.lit(3)),
-            )
-        ).alias("g"),
-    )
+    pre, g = _head_grams(docs, 120, "doc_id")
+    grams = pre.select("doc_id", g.alias("g"))
     pairs = setsim_self_join(
         grams, "doc_id", "g", 0.5, out_a="ia", out_b="ib"
     )
@@ -4031,20 +3949,8 @@ def q79_kcore(spark, sf_dir):
     from ..operators.setsim import setsim_self_join
 
     docs = _t(spark, sf_dir, "documents")
-    # r6: materialize the 120-char prefix BEFORE the gram transform —
-    # a lambda referencing substring(text,1,120) directly re-evaluates
-    # the substring per gram (118x per doc; the q14 posting-stream
-    # finding). Same expression values, same grams.
-    pre = docs.select("doc_id", F.substring("text", 1, 120).alias("__t"))
-    grams = pre.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length("__t") - 2),
-                lambda i: F.col("__t").substr(i, F.lit(3)),
-            )
-        ).alias("g"),
-    )
+    pre, g = _head_grams(docs, 120, "doc_id")
+    grams = pre.select("doc_id", g.alias("g"))
     pairs = setsim_self_join(
         grams, "doc_id", "g", 0.5, out_a="ia", out_b="ib"
     )
@@ -4102,20 +4008,8 @@ def q80_containment_pairs(spark, sf_dir):
     from ..operators.setsim import containment_join
 
     docs = _t(spark, sf_dir, "documents")
-    # r6: materialize the 120-char prefix BEFORE the gram transform —
-    # a lambda referencing substring(text,1,120) directly re-evaluates
-    # the substring per gram (118x per doc; the q14 posting-stream
-    # finding). Same expression values, same grams.
-    pre = docs.select("doc_id", F.substring("text", 1, 120).alias("__t"))
-    grams = pre.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length("__t") - 2),
-                lambda i: F.col("__t").substr(i, F.lit(3)),
-            )
-        ).alias("g"),
-    )
+    pre, g = _head_grams(docs, 120, "doc_id")
+    grams = pre.select("doc_id", g.alias("g"))
     return containment_join(
         grams, "doc_id", "g", 0.7, out_a="ia", out_b="ib", out_sim="cont"
     )

@@ -260,6 +260,16 @@ def _py_shingles(s, n=3):
     return list(dict.fromkeys(grams))
 
 
+@pytest.mark.parametrize(
+    "t,n_bands,shape",
+    [(0.5, None, (2, 16)), (0.7, None, (3, 10)), (0.9, None, (7, 4)), (0.7, 8, (4, 8))],
+)
+def test_band_shape(t, n_bands, shape):
+    from knowledge_harvest_from_lms_spark.operators.graph import _band_shape
+
+    assert _band_shape(t, 32, n_bands) == shape
+
+
 def test_char_shingles_match_python_reference(spark):
     from knowledge_harvest_from_lms_spark.operators.graph import char_shingles
 
@@ -583,3 +593,31 @@ def test_simhash_whitespace_split_recall(spark):
         simhash_signatures(docs, "text", "doc_id"), max_hamming=4
     ).collect()
     assert [(p.id_a, p.id_b, p.hamming) for p in pairs] == [(1, 2, 0)]
+
+
+def test_lsh_candidate_pairs_exact_beyond_bitmap_dictionary(spark):
+    """More distinct grams than the bitset dictionary holds: the rare
+    grams go through the overflow arrays, and every emitted jaccard is
+    still the exact 3-gram Jaccard."""
+    import random
+
+    from knowledge_harvest_from_lms_spark.operators import bitsets
+    from knowledge_harvest_from_lms_spark.operators.graph import lsh_candidate_pairs
+
+    rng = random.Random(13)
+    ents = []
+    for _ in range(40):
+        base = "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(30))
+        k = rng.randrange(30)
+        ents += [base, base[:k] + "#" + base[k + 1:]]
+    grams = {e: set(_py_shingles(e)) for e in ents}
+    assert len(set().union(*grams.values())) > bitsets.NW * 64
+
+    df = spark.createDataFrame([(e,) for e in sorted(set(ents))], "ent string")
+    got = lsh_candidate_pairs(df, sim_threshold=0.5).collect()
+    assert got
+    for r in got:
+        ga, gb = grams[r.ent_a], grams[r.ent_b]
+        inter = len(ga & gb)
+        assert r.jaccard == inter / (len(ga) + len(gb) - inter), r
+        assert r.jaccard >= 0.5

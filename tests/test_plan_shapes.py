@@ -545,19 +545,12 @@ def test_similarity_gram_explodes_infer_no_transform_filter(spark):
 
     from knowledge_harvest_from_lms_spark.operators.graph import _gram_postings
     from knowledge_harvest_from_lms_spark.operators.setsim import _ordered_sets
+    from knowledge_harvest_from_lms_spark.plans.queries import _head_grams
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     ents = docs.select(F.substring("text", 1, 512).alias("ent"))
     assert _filters_with_transform(_gram_postings(ents)) == []
 
-    pre = docs.select("doc_id", F.substring("text", 1, 120).alias("__t"))
-    grams = pre.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length("__t") - 2),
-                lambda i: F.col("__t").substr(i, F.lit(3)),
-            )
-        ).alias("g"),
-    )
+    pre, g = _head_grams(docs, 120, "doc_id")
+    grams = pre.select("doc_id", g.alias("g"))
     assert _filters_with_transform(_ordered_sets(grams, "doc_id", "g")) == []

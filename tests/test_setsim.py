@@ -8,33 +8,30 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from knowledge_harvest_from_lms_spark.operators import setsim
+from knowledge_harvest_from_lms_spark.operators import bitsets
 from knowledge_harvest_from_lms_spark.operators.setsim import (
     setsim_self_join,
 )
 
 
-def _kernel_params(ts):
-    """(t, kernel) cases over both verify kernels: the bitmap kernel
-    keeps the bare threshold id, the array_intersect fallback adds an
-    ``-array`` suffix."""
+def _vocab_params(ts):
+    """(t, universe) cases over two token universes: the 40-token one
+    keeps the bare threshold id and fits the bitmap dictionary; the
+    2000-token one (``-vocab2000``) has more distinct tokens than the
+    dictionary holds, so rare tokens reach the exact overflow arrays."""
     return [
-        pytest.param(t, kernel, id=f"{t}{suffix}")
-        for kernel, suffix in (("bitmap", ""), ("array", "-array"))
+        pytest.param(t, universe, id=f"{t}{suffix}")
+        for universe, suffix in ((40, ""), (2000, "-vocab2000"))
         for t in ts
     ]
 
 
-def _use_kernel(monkeypatch, kernel):
-    """Force the array_intersect fallback by making every vocabulary
-    exceed the bitmap cutover."""
-    if kernel == "array":
-        monkeypatch.setattr(setsim, "_MAX_BITMAP_VOCAB", 0)
-
-
-def _assert_kernel(res, kernel):
-    plan = res._jdf.queryExecution().optimizedPlan().toString()
-    assert ("array_intersect" in plan) == (kernel == "array"), kernel
+def _rows(universe):
+    rows = _fixture() if universe == 40 else _fixture(n=300, universe=universe)
+    if universe > 40:
+        vocab = set().union(*(s for _, s in rows))
+        assert len(vocab) > bitsets.NW * 64
+    return rows
 
 
 def _brute(rows, t):
@@ -64,15 +61,13 @@ def _fixture(n=120, universe=40, seed=7):
     return rows
 
 
-@pytest.mark.parametrize("t,kernel", _kernel_params([0.5, 0.8, 1.0]))
-def test_matches_brute_force(spark, monkeypatch, t, kernel):
-    _use_kernel(monkeypatch, kernel)
-    rows = _fixture()
+@pytest.mark.parametrize("t,universe", _vocab_params([0.5, 0.8, 1.0]))
+def test_matches_brute_force(spark, t, universe):
+    rows = _rows(universe)
     df = spark.createDataFrame(
         [(i, sorted(s)) for i, s in rows], "id long, s array<string>"
     )
     res = setsim_self_join(df, "id", "s", t)
-    _assert_kernel(res, kernel)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in res.collect()}
     want = _brute(rows, t)
     assert got.keys() == want.keys()
@@ -143,10 +138,9 @@ def _brute_containment(rows, t):
     return out
 
 
-@pytest.mark.parametrize("t,kernel", _kernel_params([0.6, 0.8, 1.0]))
-def test_containment_matches_brute_force(spark, monkeypatch, t, kernel):
-    _use_kernel(monkeypatch, kernel)
-    rows = _fixture()
+@pytest.mark.parametrize("t,universe", _vocab_params([0.6, 0.8, 1.0]))
+def test_containment_matches_brute_force(spark, t, universe):
+    rows = _rows(universe)
     # plant a strict subset pair: a tiny doc inside a big one —
     # symmetric jaccard misses it, containment must not
     big = frozenset(f"x{i}" for i in range(30))
@@ -156,7 +150,6 @@ def test_containment_matches_brute_force(spark, monkeypatch, t, kernel):
         [(i, sorted(s)) for i, s in rows], "id long, s array<string>"
     )
     res = containment_join(df, "id", "s", t)
-    _assert_kernel(res, kernel)
     got = {(r["id_a"], r["id_b"]): r["containment"] for r in res.collect()}
     want = _brute_containment(rows, t)
     assert got.keys() == want.keys()
@@ -175,3 +168,23 @@ def test_containment_is_directional(spark):
         for r in containment_join(df, "id", "s", 0.9).collect()
     }
     assert got == {(1, 2): 1.0}
+
+
+def test_plan_build_runs_no_spark_job(spark):
+    """Building either join's plan is lazy: no vocabulary count, no
+    eager checkpoint, no AQE stage materialized by a lazy checkpoint —
+    every job runs when the caller asks for rows."""
+    rows = _fixture()
+    df = spark.createDataFrame(
+        [(i, sorted(s)) for i, s in rows], "id long, s array<string>"
+    )
+    sc = spark.sparkContext
+    group = "setsim-plan-build"
+    sc.setJobGroup(group, "build setsim plans")
+    try:
+        setsim_self_join(df, "id", "s", 0.5)
+        containment_join(df, "id", "s", 0.6)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
