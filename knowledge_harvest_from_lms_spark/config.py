@@ -35,10 +35,6 @@ class HarvestConfig:
     # property). None disables (exact spec parity); the default keeps
     # reference-style pruning on, as the reference does.
     prune_slack: float | None = 3.0
-    # A6 word-repeat cap: True = exact reference greedy (sequential
-    # per relation via applyInPandas, parallel across relations);
-    # False = fully window-based rank relaxation.
-    word_cap_exact: bool = True
     # J6 corpus grounding: restrict beam entity tokens to words
     # attested in the web_pages corpus (full_pipeline wires the
     # corpus_token_ids semi-join; harvest-only runs ignore this).

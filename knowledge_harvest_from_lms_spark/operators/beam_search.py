@@ -10,39 +10,44 @@ driver loop over a *frontier* DataFrame:
   frontier row = (rel, t, n_masks, ent_idx, ents, ent_logprobs,
                   token_ids, token_logprobs)
 
-Each iteration appends ONE token to every live row via an
-Arrow-batched ``mapInPandas`` expansion (P2: ONE ``mask_logits_batch``
-call per Arrow batch over all (row × prompt) jobs → weighted-average
-over the broadcast prompt ensemble → banned-ids mask → log-softmax →
-top-B among post-softmax candidates, reference
-``entity_tuple_searcher.py:169-228``), then prunes JVM-side with
-window ranks:
+Each level appends ONE token to every live row via an Arrow-batched
+``mapInPandas`` expansion (P2: ONE ``mask_logits_batch`` call per
+Arrow batch over all (row × prompt) jobs → weighted-average over the
+broadcast prompt ensemble → banned-ids mask → log-softmax → top-B
+among post-softmax candidates, reference
+``entity_tuple_searcher.py:169-228``), then prunes each relation in
+one ``groupBy("rel").applyInPandas`` step (``make_level_step``):
 
-  * completed entities: decode + filters F4–F8, dedup per parent,
-    W3 cap (n for the first entity, max_word_repeat deeper —
-    ``entity_tuple_searcher.py:79-87``);
-  * in-progress token paths: top ``token_beam_width`` per parent node.
+  * completed entities: decode + filters F4–F8 (in the expansion),
+    dedup per parent, W3 cap (n for the first entity, max_word_repeat
+    deeper — ``entity_tuple_searcher.py:79-87``);
+  * in-progress token paths: top ``token_beam_width`` per parent node;
+  * the heap-style threshold over the relation's finished tuples.
 
-The loop runs ≤ Σ n_masks ≤ n_ents·max_ent_subwords iterations
-(≤6 with reference defaults) — the reference's recursion depth bound
-(SURVEY.md §3.1). The reference's sequential heap-threshold pruning
-(``entity_tuple_searcher.py:200-209``) is replaced by deterministic
-per-level top-B + final exact re-ranking (SURVEY.md §7): safe because
-a tuple's score is the *min* of its entity logprobs, monotone
-non-increasing as the tuple extends.
+The loop runs the deepest relation's Σ n_masks ≤
+n_ents·max_ent_subwords levels (≤6 with reference defaults) — the
+reference's recursion depth bound (SURVEY.md §3.1). The reference's sequential exploration of sorted
+logits until its heap threshold (``entity_tuple_searcher.py:200-209``)
+is replaced by deterministic per-level top-B + final exact
+re-ranking (SURVEY.md §7): safe because a tuple's score is the *min*
+of its entity logprobs, monotone non-increasing as the tuple extends.
 
-Scale notes: the frontier is repartitioned by (rel, t) hash each
-iteration and localCheckpoint()ed to cut lineage; prompts/relation
-metadata ride inside the UDF closure (broadcast, tiny); all heavy
-pruning is WindowExec over the shuffle keys, no driver collect of
-candidate rows.
+Scale notes: finished tuples stay in the state frame (``ent_idx ==
+size(n_masks)``) next to the live rows, so one level is one expansion
+(live rows repartitioned by (rel, t, ents), so the LM work spreads
+over every core however few relations there are) and one grouped
+prune per relation, ending in ONE eager ``localCheckpoint`` that cuts
+the lineage. Every pruning rule is per relation, so the whole prune
+runs inside the group and no candidate row reaches the driver.
+Prompts/relation metadata ride inside the UDF closure (tiny).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 from pyspark.sql import types as T
 
 from ..config import HarvestConfig
@@ -66,12 +71,15 @@ FRONTIER_SCHEMA = T.StructType(
 def build_rel_info(prompt_weights: DataFrame, relations: DataFrame) -> dict:
     """Driver-side collect of the tiny prompt ensemble: {rel:
     {"prompts": [(prompt, weight)...], "n_ents": int}} — broadcast to
-    executors inside the expansion-UDF closure (J3)."""
+    executors inside the expansion-UDF closure (J3). Prompts are ordered
+    by (weight desc, prompt asc), sorted on the driver: a Spark sort
+    would add a sampling job and a shuffle for a few hundred rows."""
     arity = {r["rel"]: r["n_ents"] for r in relations.select("rel", "n_ents").collect()}
+    rows = prompt_weights.select("rel", "prompt", "weight").collect()
     info: dict = {}
-    for row in prompt_weights.orderBy("rel", F.desc("weight"), "prompt").collect():
-        info.setdefault(row["rel"], {"prompts": [], "n_ents": arity[row["rel"]]})
-        info[row["rel"]]["prompts"].append((row["prompt"], float(row["weight"])))
+    for rel, prompt, weight in sorted(rows, key=lambda r: (r[0], -r[2], r[1])):
+        info.setdefault(rel, {"prompts": [], "n_ents": arity[rel]})
+        info[rel]["prompts"].append((prompt, float(weight)))
     return info
 
 
@@ -112,9 +120,6 @@ def make_expand_fn(
     """
 
     def fn(batches):
-        import numpy as np
-        import pandas as pd
-
         from ..functions.textops import (
             entity_conflicts_with_tuple,
             entity_in_any_prompt,
@@ -308,41 +313,121 @@ def make_expand_fn(
     return fn
 
 
-def _prune_completed(df: DataFrame, cfg: HarvestConfig) -> DataFrame:
-    """Dedup same entity per parent (keep best logprob), then W3 cap:
-    top-n for the first entity, top-max_word_repeat deeper."""
-    parent = F.concat_ws(
-        SEP,
-        F.col("rel"),
-        F.col("t").cast("string"),
-        F.concat_ws(SEP, F.slice("ents", 1, F.size("ents") - 1)),
+def word_cap_greedy(pdf: pd.DataFrame, max_word_repeat: int, max_n: int) -> pd.DataFrame:
+    """O1 dedup + A6 word-repeat cap + W2 top-n over ONE relation's
+    candidates (columns ``ents`` and ``min_logprob``; any others ride
+    along) → the accepted rows, in acceptance order.
+
+    Reference semantics (``entity_tuple_searcher.py:53-71``): visit
+    tuples by (min_logprob desc, SEP-joined tuple asc), keeping the
+    best-scoring row per tuple; a tuple is rejected if ANY of its word
+    occurrences would push that word's count past ``max_word_repeat``
+    (each occurrence checked against the pre-acceptance count);
+    accepted tuples increment counts by multiplicity; stop at
+    ``max_n`` accepted.
+    """
+    ranked = (
+        pdf.assign(_ek=pdf["ents"].map(SEP.join))
+        .sort_values(["min_logprob", "_ek"], ascending=[False, True], kind="mergesort")
+        .drop_duplicates("_ek")
     )
-    pred = F.element_at("ents", -1)
-    lp = F.element_at("ent_logprobs", -1)
-    df = df.withColumn("_parent", parent).withColumn("_pred", pred).withColumn("_lp", lp)
-    dd = W.partitionBy("_parent", "_pred").orderBy(F.desc("_lp"))
-    df = df.withColumn("_dd", F.row_number().over(dd)).filter(F.col("_dd") == 1)
-    cap = F.when(F.col("ent_idx") == 1, F.lit(cfg.max_n_ent_tuples)).otherwise(
-        F.lit(cfg.max_word_repeat)
-    )
-    w3 = W.partitionBy("_parent").orderBy(F.desc("_lp"), F.asc("_pred"))
-    df = df.withColumn("_rn", F.row_number().over(w3)).filter(F.col("_rn") <= cap)
-    return df.drop("_parent", "_pred", "_lp", "_dd", "_rn")
+    counts: dict[str, int] = {}
+    keep: list[int] = []
+    for pos, ents in enumerate(ranked["ents"]):
+        if len(keep) >= max_n:
+            break
+        words = [w for e in ents for w in e.split()]
+        if any(counts.get(w, 0) + 1 > max_word_repeat for w in words):
+            continue
+        for w in words:
+            counts[w] = counts.get(w, 0) + 1
+        keep.append(pos)
+    return ranked.iloc[keep].drop(columns="_ek")
 
 
-def _prune_inprogress(df: DataFrame, cfg: HarvestConfig) -> DataFrame:
-    parent = F.concat_ws(
-        SEP, F.col("rel"), F.col("t").cast("string"),
-        F.col("ent_idx").cast("string"), F.concat_ws(SEP, "ents"),
-    )
-    score = F.array_min("token_logprobs")
-    path = F.concat_ws(",", F.transform("token_ids", lambda x: x.cast("string")))
-    w = W.partitionBy(parent).orderBy(F.desc(score), F.asc(path))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= cfg.token_beam_width)
-        .drop("_rn")
-    )
+def _top_per_key(keys, score, tie, cap) -> pd.Index:
+    """Index labels of the rows ranked below ``cap`` within their key,
+    ranked by (score desc, tie asc)."""
+    r = pd.DataFrame({"key": keys, "score": score, "tie": tie, "cap": cap})
+    r = r.sort_values(["score", "tie"], ascending=[False, True], kind="mergesort")
+    return r.index[r.groupby("key", sort=False).cumcount() < r["cap"]]
+
+
+def make_level_step(cfg: HarvestConfig):
+    """The prune of one beam level for ONE relation, as an
+    ``applyInPandas`` function. Its group holds the level's expanded
+    children plus every tuple finished at an earlier level (finished
+    rows stay in the state frame, ``ent_idx == len(n_masks)``), so the
+    threshold sees all of the relation's raw candidates.
+
+    1. Completed entities (``token_ids == []``): dedup per (parent,
+       pred) keeping the best logprob, then the W3 cap by (logprob
+       desc, pred asc) — n for the first entity, max_word_repeat deeper
+       (``entity_tuple_searcher.py:79-87``). A parent's completed
+       children all finish at the same level, so re-pruning earlier
+       finished rows leaves them as they are.
+    2. In-progress token paths: top ``token_beam_width`` per (t,
+       ent_idx, ents) by (min token logprob desc, comma-joined ids asc,
+       compared as strings).
+    3. Branch-and-bound (``prune_slack``), mirroring the reference's
+       heap threshold (``entity_tuple_searcher.py:76-77``: the bar is
+       the n-th tuple CURRENTLY ACCEPTED UNDER WORD CAPS): run the
+       word-cap greedy over the finished tuples and take the k-th
+       accepted score, k = slack·n; live rows whose running min falls
+       below it are dropped. No bar until k tuples are accepted. Still
+       a HEURISTIC: a later high-scoring tuple can evict an accepted
+       one via word caps and push the final greedy below today's bar
+       (the reference's threshold has the same property); see SURVEY.md
+       §7 and ADVICE r1.
+    """
+    n, max_word_repeat, width = cfg.max_n_ent_tuples, cfg.max_word_repeat, cfg.token_beam_width
+    k = None if cfg.prune_slack is None else max(1, int(n * cfg.prune_slack))
+
+    def step(pdf):
+        done = pdf["token_ids"].map(len) == 0
+        comp, prog = pdf[done], pdf[~done]
+
+        pred = comp["ents"].map(lambda e: e[-1])
+        lp = comp["ent_logprobs"].map(lambda a: a[-1])
+        parent = [SEP.join([str(t), *e[:-1]]) for t, e in zip(comp["t"], comp["ents"])]
+        best = (
+            pd.DataFrame({"parent": parent, "pred": pred, "lp": lp}, index=comp.index)
+            .sort_values("lp", ascending=False, kind="mergesort")
+            .drop_duplicates(["parent", "pred"])
+        )
+        comp_keep = _top_per_key(
+            best["parent"], best["lp"], best["pred"],
+            np.where(comp.loc[best.index, "ent_idx"] == 1, n, max_word_repeat),
+        )
+        node = zip(prog["t"], prog["ent_idx"], prog["ents"])
+        prog_keep = _top_per_key(
+            [SEP.join([str(t), str(i), *e]) for t, i, e in node],
+            prog["token_logprobs"].map(min),
+            prog["token_ids"].map(lambda ids: ",".join(map(str, ids))),
+            width,
+        )
+        kept = pdf.loc[comp_keep.append(prog_keep)]
+
+        if k is None:
+            return kept
+        finished = kept["ent_idx"] == kept["n_masks"].map(len)
+        accepted = word_cap_greedy(
+            pd.DataFrame({
+                "ents": kept["ents"][finished],
+                "min_logprob": kept["ent_logprobs"][finished].map(min),
+            }),
+            max_word_repeat, k,
+        )
+        if len(accepted) < k:
+            return kept  # no bar until k tuples are accepted
+        bar = accepted["min_logprob"].iloc[-1]
+        running_min = [
+            min((*e, *t), default=float("inf"))
+            for e, t in zip(kept["ent_logprobs"], kept["token_logprobs"])
+        ]
+        return kept[finished | (pd.Series(running_min, index=kept.index) >= bar)]
+
+    return step
 
 
 def search_ent_tuples(
@@ -368,229 +453,44 @@ def search_ent_tuples(
         cfg.lm, cfg.seed, rel_info, cfg.token_beam_width, allowed_token_ids,
         mask_payload=token_mask_payload(cfg.lm, cfg.seed),
     )
-
-    frontier = init_frontier(spark, rel_info, cfg)
-    done: list[DataFrame] = []
-    thresholds: dict[str, float] = {}  # rel -> prunable min_logprob
-    raw_seen = False  # latched: some relation reached k raw candidates
+    step = make_level_step(cfg)
     max_iters = max(
         sum(get_n_masks(t, m["n_ents"], cfg.max_ent_subwords))
         for m in rel_info.values()
         for t in range(cfg.max_ent_subwords ** m["n_ents"])
     )
 
+    finished = F.col("ent_idx") == F.size("n_masks")
+    state = init_frontier(spark, rel_info, cfg)
     for _ in range(max_iters):
-        # One expansion materialization per iteration: the LM-heavy
-        # mapInPandas output is checkpointed once; the window prunes
-        # and the finished/live split all read from that checkpoint.
         # cols-only repartition → AQE coalesces the tiny shuffles that a
         # fixed numPartitions would pin at shuffle_partitions tasks
         children = (
-            frontier.repartition("rel", "t", "ents")
+            state.filter(~finished)
+            .repartition("rel", "t", "ents")
             .mapInPandas(expand, schema=FRONTIER_SCHEMA)
+        )
+        state = (
+            children.unionByName(state.filter(finished))
+            .groupBy("rel")
+            .applyInPandas(step, schema=FRONTIER_SCHEMA)
             .localCheckpoint(eager=True)
         )
-        if children.isEmpty():  # cheap on materialized checkpoint
-            break
-        # r6: materialize the completed-prune ONCE per iteration. The
-        # former lazy `done` chunks re-executed each prior iteration's
-        # TWO prune windows inside every threshold job (8 window
-        # shuffles by iteration 3 — measured 3.0 s of the 9.3 s
-        # steady-state harvest) and again in the final union; one
-        # ~0.25 s eager checkpoint per iteration buys all of that back
-        # (guide §5 "localCheckpoint to cut lineage").
-        completed = _prune_completed(
-            children.filter(F.size("token_ids") == 0), cfg
-        ).localCheckpoint(eager=True)
-        inprog = _prune_inprogress(children.filter(F.size("token_ids") > 0), cfg)
-
-        n_ents_col = F.size("n_masks")
-        finished = completed.filter(F.col("ent_idx") == n_ents_col)
-        live = completed.filter(F.col("ent_idx") < n_ents_col)
-        done.append(
-            finished.select(
-                "rel", "ents", F.array_min("ent_logprobs").alias("min_logprob")
-            )
-        )
-        frontier = live.unionByName(inprog)
-
-        if cfg.prune_slack is not None and done:
-            # Branch-and-bound mirroring the reference's heap threshold
-            # (entity_tuple_searcher.py:76-77: the bar is the n-th best
-            # tuple CURRENTLY ACCEPTED UNDER WORD CAPS — tuples the cap
-            # rejects never enter the heap). We therefore run the exact
-            # word-cap greedy over the accumulated candidates and take
-            # the k-th ACCEPTED score, k = slack·n — strictly more
-            # conservative than both the raw k-th rank and the
-            # reference's own k=n bar. Still a HEURISTIC, not exact:
-            # a future high-scoring tuple can evict an accepted one via
-            # word caps and force the final greedy below today's bar
-            # (the reference's threshold has the same property); see
-            # SURVEY.md §7 and ADVICE r1.
-            k = max(1, int(cfg.max_n_ent_tuples * cfg.prune_slack))
-            acc = done[0]
-            for d in done[1:]:
-                acc = acc.unionByName(d)
-            # Lossless precheck: the bar exists only once a relation has
-            # >= k ACCEPTED tuples, and accepted <= raw — so while no
-            # relation has even k raw candidates, skip the (Python
-            # greedy + collect) job entirely. Early beam levels always
-            # hit this. Raw counts only grow, so the check latches:
-            # once satisfied it never runs again (no extra aggregation
-            # job on mid/late iterations).
-            if not raw_seen:
-                raw_seen = not (
-                    acc.groupBy("rel")
-                    .agg(F.count(F.lit(1)).alias("_c"))
-                    .filter(F.col("_c") >= k)
-                    .isEmpty()
-                )
-            thresholds: dict[str, float] = {}
-            if raw_seen:
-                # r6: collect the greedy's accepted rows directly
-                # (bounded: ≤ k rows per relation by construction) and
-                # fold count/min in the driver — the former
-                # groupBy+filter round trip added one exchange + job
-                # per prune iteration for the same ≤|rels| numbers.
-                accepted = finalize_candidates_greedy(acc, cfg, max_n=k)
-                stats: dict[str, tuple[int, float]] = {}
-                for r in accepted.select("rel", "min_logprob").collect():
-                    c, m = stats.get(r["rel"], (0, float("inf")))
-                    stats[r["rel"]] = (c + 1, min(m, r["min_logprob"]))
-                thresholds = {
-                    rel: m for rel, (c, m) in stats.items() if c >= k
-                }  # bar defined once k accepted
-            if thresholds:
-                th_df = F.broadcast(
-                    spark.createDataFrame(
-                        [(r, float(v)) for r, v in sorted(thresholds.items())],
-                        "rel string, _th double",
-                    )
-                )
-                running_min = F.least(
-                    F.coalesce(F.array_min("ent_logprobs"), F.lit(float("inf"))),
-                    F.coalesce(F.array_min("token_logprobs"), F.lit(float("inf"))),
-                )
-                # broadcast join, not an O(#rels) when-chain: ekar has
-                # 487 relations (VERDICT r1 item 5/8)
-                frontier = (
-                    frontier.join(th_df, "rel", "left")
-                    .filter(F.col("_th").isNull() | (running_min >= F.col("_th")))
-                    .drop("_th")
-                )
-
-        # eager frontier checkpoint: measured faster than leaving the
-        # window prunes + threshold join to re-run inside the next
-        # expansion's shuffle-write stage (12.8s vs 11.1s bench harvest)
-        frontier = frontier.localCheckpoint(eager=True)
-
-    if not done:
-        return spark.createDataFrame(
-            [], "rel string, ents array<string>, min_logprob double"
-        )
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    return out
-
-
-def finalize_candidates_greedy(
-    candidates: DataFrame, cfg: HarvestConfig, max_n: int | None = None
-) -> DataFrame:
-    """O1 dedup + A6 word-repeat cap (exact greedy) + W2 top-n.
-
-    Reference semantics (``entity_tuple_searcher.py:53-71``): accept
-    tuples in score order; a tuple is rejected if ANY of its word
-    occurrences would push that word's count past ``max_word_repeat``
-    (each occurrence checked against the pre-acceptance count);
-    accepted tuples increment counts by multiplicity; stop at n.
-
-    ``max_n`` overrides ``cfg.max_n_ent_tuples`` (the prune-threshold
-    path digs ``slack·n`` deep with the same greedy).
-
-    The greedy scan is sequential per relation but tiny (post-dedup
-    candidates), so it runs as one ``applyInPandas`` group per
-    relation — parallel across relations, exact within one.
-    """
-    import pandas as pd  # noqa: F401 (schema doc)
-
-    max_word_repeat = cfg.max_word_repeat
-    max_n = cfg.max_n_ent_tuples if max_n is None else max_n
-
-    def greedy(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(
-            by=["min_logprob", "_ek"], ascending=[False, True], kind="mergesort"
-        )
-        # O1 dedup fused into the greedy (r6): keep the best-scoring row
-        # per tuple key. Sorted desc + keep="first" == the former
-        # groupBy(rel, _ek).agg(max(min_logprob)) pre-shuffle, but saves
-        # one full exchange + stage per invocation — this runs on every
-        # prune-threshold iteration of the beam loop (guide §2.4).
-        pdf = pdf.drop_duplicates(subset=["_ek"], keep="first")
-        counts: dict[str, int] = {}
-        keep_rows = []
-        for row in pdf.itertuples(index=False):
-            if len(keep_rows) >= max_n:
-                break
-            words = [w for e in row.ents for w in e.split()]
-            if any(counts.get(w, 0) + 1 > max_word_repeat for w in words):
-                continue
-            for w in words:
-                counts[w] = counts.get(w, 0) + 1
-            keep_rows.append(row)
-        if not keep_rows:
-            return pdf.iloc[0:0]  # preserves Arrow-compatible dtypes
-        return pd.DataFrame(keep_rows, columns=list(pdf.columns))
-
-    ek = F.concat_ws(SEP, "ents")
-    cand = candidates.withColumn("_ek", ek)
-    out = cand.groupBy("rel").applyInPandas(
-        greedy, schema="rel string, _ek string, ents array<string>, min_logprob double"
+    return state.filter(finished).select(
+        "rel", "ents", F.array_min("ent_logprobs").alias("min_logprob")
     )
-    return out.select("rel", "ents", "min_logprob")
 
 
 def finalize_candidates(candidates: DataFrame, cfg: HarvestConfig) -> DataFrame:
-    """O1 dedup + A6 word-repeat cap + W2 top-n per relation.
-
-    Dispatches on ``cfg.word_cap_exact``: the exact greedy
-    (finalize_candidates_greedy, reference-faithful) or the fully
-    window-based relaxation below, which ranks tuples per relation by
-    (min_logprob desc, ents) and keeps a tuple iff every one of its
-    word occurrences is within the first ``max_word_repeat`` for that
-    word (SURVEY.md §2.4 A6).
-    """
-    if getattr(cfg, "word_cap_exact", True):
-        return finalize_candidates_greedy(candidates, cfg)
-    ek = F.concat_ws(SEP, "ents")
-    cand = (
-        candidates.withColumn("_ek", ek)
-        .groupBy("rel", "_ek")
-        .agg(F.first("ents").alias("ents"), F.max("min_logprob").alias("min_logprob"))
-    )
-    wt = W.partitionBy("rel").orderBy(F.desc("min_logprob"), F.asc("_ek"))
-    cand = cand.withColumn("tuple_rank", F.row_number().over(wt))
-
-    words = cand.select(
-        "rel", "_ek", "tuple_rank",
-        F.posexplode(F.flatten(F.transform("ents", lambda e: F.split(e, " ")))).alias(
-            "wpos", "word"
-        ),
-    )
-    ww = W.partitionBy("rel", "word").orderBy(F.asc("tuple_rank"), F.asc("wpos"))
-    occ = words.withColumn("word_occ", F.row_number().over(ww))
-    bad = (
-        occ.groupBy("rel", "_ek")
-        .agg(F.max("word_occ").alias("max_occ"))
-        .filter(F.col("max_occ") > cfg.max_word_repeat)
-        .select("rel", "_ek")
-    )
-    kept = cand.join(bad, ["rel", "_ek"], "left_anti")
-    w2 = W.partitionBy("rel").orderBy(F.asc("tuple_rank"))
+    """O1 dedup + A6 word-repeat cap + W2 top-n per relation: the exact
+    greedy (``word_cap_greedy``) as one ``applyInPandas`` group per
+    relation — sequential within a relation, parallel across them."""
+    max_word_repeat, max_n = cfg.max_word_repeat, cfg.max_n_ent_tuples
     return (
-        kept.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") <= cfg.max_n_ent_tuples)
-        .select("rel", "ents", "min_logprob")
+        candidates.select("rel", "ents", "min_logprob")
+        .groupBy("rel")
+        .applyInPandas(
+            lambda pdf: word_cap_greedy(pdf, max_word_repeat, max_n),
+            schema="rel string, ents array<string>, min_logprob double",
+        )
     )

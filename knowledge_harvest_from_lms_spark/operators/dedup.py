@@ -18,7 +18,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import char_shingles, lsh_candidate_pairs, minhash_signature  # reuse
+from .graph import lsh_candidate_pairs  # reuse
 
 
 # ---------------------------------------------------------------------------

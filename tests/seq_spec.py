@@ -2,7 +2,7 @@
 
 Implements, in plain Python over the same StubMLM, exactly the
 deterministic semantics the Spark operators claim: per-level top-B
-expansion, per-node caps, rank-based word-repeat relaxation, ensemble
+expansion, per-node caps, the exact word-repeat greedy, ensemble
 re-scoring. Spark output must MATCH this spec (stronger than the
 P/R≥0.95 bar, which covers the documented divergence from the
 reference's order-dependent heaps — SURVEY.md §7).
@@ -111,7 +111,7 @@ def _expand_entity(lm, level_prompts, n_masks, ent_idx, width):
                     (tids + [int(cand_ids[idx])], tlps + [float(lps[idx])])
                 )
         if step < k - 1:
-            # in-progress width prune (matches Spark _prune_inprogress);
+            # in-progress width prune (matches beam_search.make_level_step);
             # the FINAL level is capped later at entity completion,
             # like the reference's entity heap.
             children.sort(key=lambda c: (-min(c[1]), ",".join(map(str, c[0]))))
@@ -168,18 +168,11 @@ def spec_search(records, pw, lm, cfg):
 
 def spec_finalize(cands, cfg):
     """dedup + A6 word cap + top-n. → {rel: [(ents, min_lp)]} in
-    acceptance order. Two modes, mirroring the Spark operator:
-
-    - word_cap_exact (default): reference greedy — reject a tuple if
-      any word occurrence would exceed the cap (each occurrence
-      checked against the PRE-acceptance count,
-      entity_tuple_searcher.py:56-60), else increment by multiplicity;
-      stop at n accepted.
-    - relaxation: every occurrence must fall within the first
-      max_word_repeat ranks for its word (occurrences counted for
-      rejected tuples too)."""
+    acceptance order: the reference greedy — reject a tuple if any word
+    occurrence would exceed the cap (each occurrence checked against the
+    PRE-acceptance count, entity_tuple_searcher.py:56-60), else
+    increment by multiplicity; stop at n accepted."""
     out = {}
-    exact = getattr(cfg, "word_cap_exact", True)
     for rel, items in cands.items():
         best = {}
         for ents, lp in items:
@@ -189,24 +182,15 @@ def spec_finalize(cands, cfg):
         word_occ = {}
         kept = []
         for ents, lp in ranked:
-            if exact:
-                if len(kept) >= cfg.max_n_ent_tuples:
-                    break
-                words = [wd for e in ents for wd in e.split()]
-                if any(word_occ.get(wd, 0) + 1 > cfg.max_word_repeat for wd in words):
-                    continue
-                for wd in words:
-                    word_occ[wd] = word_occ.get(wd, 0) + 1
-                kept.append((list(ents), lp))
-            else:
-                occs = []
-                for e in ents:
-                    for wd in e.split():
-                        word_occ[wd] = word_occ.get(wd, 0) + 1
-                        occs.append(word_occ[wd])
-                if max(occs) <= cfg.max_word_repeat:
-                    kept.append((list(ents), lp))
-        out[rel] = kept if exact else kept[: cfg.max_n_ent_tuples]
+            if len(kept) >= cfg.max_n_ent_tuples:
+                break
+            words = [wd for e in ents for wd in e.split()]
+            if any(word_occ.get(wd, 0) + 1 > cfg.max_word_repeat for wd in words):
+                continue
+            for wd in words:
+                word_occ[wd] = word_occ.get(wd, 0) + 1
+            kept.append((list(ents), lp))
+        out[rel] = kept
     return out
 
 
