@@ -92,22 +92,35 @@ class FakeSubwordTokenizer:
                     words.update(e.replace("_", " ").lower().split())
         for w in sorted(words):
             if w:
-                self._encode_word(w, word_start=True)
-                self._encode_word(w, word_start=False)
+                for word_start in (True, False):
+                    for piece in self._pieces(w, word_start):
+                        self._register(piece)
 
-    def _pid(self, piece: str) -> int:
-        pid = 4 + _stable64(piece) % (V - 4)
+    def _register(self, piece: str) -> int:
+        """Construction only: ``piece`` owns its id's decode entry."""
+        pid = self._pid(piece)
         self._rev[pid] = piece
         return pid
 
+    def _pid(self, piece: str) -> int:
+        # Piece ids collide in V slots: an encode only fills an id no
+        # piece owns yet, so the decode of a registered id never
+        # depends on what this process encoded before.
+        pid = 4 + _stable64(piece) % (V - 4)
+        self._rev.setdefault(pid, piece)
+        return pid
+
+    def _pieces(self, word: str, word_start: bool) -> list[str]:
+        pieces = [
+            word[i: i + self._piece_len]
+            for i in range(0, len(word), self._piece_len)
+        ]
+        if word_start:
+            pieces[0] = BOUND + pieces[0]
+        return pieces
+
     def _encode_word(self, word: str, word_start: bool) -> list[int]:
-        ids = []
-        for i in range(0, len(word), self._piece_len):
-            piece = word[i: i + self._piece_len]
-            if i == 0 and word_start:
-                piece = BOUND + piece
-            ids.append(self._pid(piece))
-        return ids
+        return [self._pid(p) for p in self._pieces(word, word_start)]
 
     def encode(self, text: str, add_special_tokens: bool = True) -> list[int]:
         ids: list[int] = []
@@ -147,7 +160,7 @@ class FakeSubwordMLM(HFMaskedLM):
         # ban the single-piece stopword forms the beam could emit
         for w in STOPWORD_SET:
             if len(w) <= self._tok._piece_len:
-                banned.append(self._tok._pid(BOUND + w))
+                banned.append(self._tok._register(BOUND + w))
         self._banned = np.array(sorted(set(banned)), dtype=np.int64)
 
     def _forward_logits_padded(self, ids_list: Sequence[Sequence[int]]) -> np.ndarray:

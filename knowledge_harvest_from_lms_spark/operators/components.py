@@ -4,38 +4,40 @@ Vassilvitskii, "Connected Components in MapReduce and Beyond",
 SoCC 2014 — re-derived from the published algorithm, no engine code
 consulted).
 
-Why a second CC implementation next to ``graph.canonical_map``'s
-label propagation: label prop converges in O(diameter) rounds — fine
-for the tiny spelling clusters it serves (its documented contract),
-but a long path/chain component needs as many shuffle rounds as its
-length. The star algorithm contracts components in O(log n) rounds
-REGARDLESS of shape (each large-star halves tree heights in
-expectation), which is the bound you want when the input is an
-arbitrary 10^10-edge similarity graph rather than a pile of
-near-clique dup clusters. ``tests/test_components.py`` pins the two
-implementations equal on LSH pair graphs and the star algorithm
-alone on adversarial chains where label prop's iteration cap would
-give up.
+This is the package's one connected-components loop. ``star_forest``
+runs it; ``connected_components`` emits its (vertex, component) rows
+and ``graph.canonical_map`` labels an entity column from the same
+converged edges. The star algorithm contracts components in O(log n)
+rounds regardless of shape (each large-star halves tree heights in
+expectation), so a long path or chain costs no more rounds than a
+near-clique dup cluster. ``tests/test_components.py`` pins it against
+a driver-side union-find on random graphs and adversarial chains.
 
-Per round, each star operation is: explode edges both directions
-(every undirected edge appears as (u,v) and (v,u)), one
-``min(neighbor ∪ self)`` aggregate per node (map-side combining — a
-hub's million neighbors collapse to partials), one join back to
-re-point edges. The edge set only shrinks or re-points — never
-grows — and rounds end when a checksum aggregate (count + xor of
-xxhash64) is stable, checked driver-side on a 2-row result. Eager
-``localCheckpoint`` per round keeps lineage depth O(1) (the
-pagerank/BPE-trainer discipline).
+Per round: explode edges both directions (every undirected edge
+appears as (u,v) and (v,u)) in one pass, no union, so an
+unmaterialized input is read once; large-star takes ``min(N(u) ∪ {u})``
+per node as a window over the node's edges and re-points every larger
+neighbor to it; small-star does the same over the big → small edges
+large-star emits, then drops duplicate rows. The edge set only
+shrinks or re-points — never grows. An eager ``localCheckpoint`` per
+round keeps lineage depth O(1) (the pagerank/BPE-trainer discipline).
 
-Scale: per round 2-3 shuffles of the current edge set, O(log n)
-rounds; driver state is one checksum pair per round. Skew: the
-aggregate absorbs hubs map-side; the join-back key is the node id —
-a mega-hub's fan-out is AQE skew-split material, and the algorithm
-itself shrinks hubs every round (that is its point).
+Stopping: small-star output always has ``dst < src`` and no duplicate
+rows, so it is the final star forest — every member pointing at its
+component's minimum — exactly when no ``src`` has two ``dst``s and no
+``dst`` is also a ``src``. One per-node aggregate over the round's
+checkpoint, read with ``take(1)``, tests that; the loop stops on the
+round that converges, with no confirming round.
+
+Scale: per round three shuffles of the current edge set (two window
+partitions, one distinct) plus the per-node check, O(log n) rounds;
+the driver holds at most one row per round. Skew: a hub's edges share
+one window partition, and the algorithm itself shrinks hubs every
+round (that is its point).
 
 Output contract: one row per VERTEX that appears in the edge set,
 ``(vertex, component)`` with component = the component's minimum
-vertex id — the same canonical-representative convention as
+vertex id — the canonical-representative convention of
 ``canonical_map`` / ``dedup.cluster_decisions``, so downstream
 survivor rules compose unchanged. Isolated vertices never enter an
 edge list; union them in upstream if they must appear.
@@ -44,117 +46,128 @@ edge list; union them in upstream if they must appear.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+# The algorithm's O(log n) bound makes 50 rounds absurdly safe: hitting
+# it means the input violates the contract, e.g. ids mutating between
+# actions.
+MAX_ROUNDS = 50
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
-    """Both directions, self-loops dropped, NULLs dropped (an edge to
-    an unknown vertex identifies nothing), exact dups collapsed."""
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).filter(
-        F.col("src").isNotNull()
-        & F.col("dst").isNotNull()
-        & (F.col("src") != F.col("dst"))
+    """(u, v) both directions of every (src, dst) edge, in one pass;
+    self-loops and NULLs dropped (an edge to an unknown vertex
+    identifies nothing). The drop filters the exploded rows: a filter
+    on the input would be pushed into it, and the pushdown copies the
+    src/dst expressions into the filter, evaluating them twice."""
+    both = F.explode(
+        F.array(
+            F.struct(F.col("src").alias("u"), F.col("dst").alias("v")),
+            F.struct(F.col("dst").alias("u"), F.col("src").alias("v")),
+        )
     )
-    return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    return (
+        edges.select(both.alias("_e"))
+        .select("_e.u", "_e.v")
+        .filter(
+            F.col("u").isNotNull()
+            & F.col("v").isNotNull()
+            & (F.col("u") != F.col("v"))
+        )
+    )
 
 
 def _min_neighbor(direct: DataFrame) -> DataFrame:
-    """(u, m) with m = min(N(u) ∪ {u}) over the directed view."""
-    return (
-        direct.groupBy("u")
-        .agg(F.min("v").alias("__mn"))
-        .withColumn("m", F.least("__mn", "u"))
-        .drop("__mn")
+    """``direct`` (u, v) plus m = min(N(u) ∪ {u}) on every row."""
+    return direct.withColumn(
+        "m", F.least(F.min("v").over(W.partitionBy("u")), F.col("u"))
     )
 
 
 def _large_star(direct: DataFrame) -> DataFrame:
-    """Connect every neighbor LARGER than u to min(N(u) ∪ {u})."""
-    m = _min_neighbor(direct)
+    """(src, dst) big → small: every neighbor LARGER than u re-points
+    to min(N(u) ∪ {u})."""
     return (
-        direct.join(m, "u")
+        _min_neighbor(direct)
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
 
 
-def _small_star(direct: DataFrame) -> DataFrame:
-    """Connect every neighbor <= u (and u itself) to min(N(u) ∪ {u});
-    operates on the (v <= u) half-view plus the self edge."""
-    half = direct.filter(F.col("v") < F.col("u"))
-    m = (
-        half.groupBy("u")
-        .agg(F.min("v").alias("__mn"))
-        .withColumn("m", F.least("__mn", "u"))
-        .drop("__mn")
+def _small_star(down: DataFrame) -> DataFrame:
+    """Over big → small (src, dst) edges (the smaller-neighbor half of
+    the undirected view): every smaller neighbor of u, and u itself,
+    re-points to m = min(N(u) ∪ {u}). The row whose neighbor is m
+    carries u's own edge (u, m) instead of the self-loop (m, m), so
+    each row emits one edge; duplicates across nodes are dropped."""
+    half = _min_neighbor(
+        down.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
-    pointed = (
-        half.join(m, "u")
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-        .union(m.select(F.col("u").alias("src"), F.col("m").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
+    return half.select(
+        F.when(F.col("v") == F.col("m"), F.col("u"))
+        .otherwise(F.col("v"))
+        .alias("src"),
+        F.col("m").alias("dst"),
+    ).distinct()
+
+
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True when no src has two dsts and no dst is a src — for
+    small-star output (dst < src, no duplicate rows), the converged
+    member → component-minimum edges."""
+    ends = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("n"), F.lit(1).alias("out")),
+                F.struct(F.col("dst").alias("n"), F.lit(0).alias("out")),
+            )
+        ).alias("_n")
+    ).select("_n.*")
+    stuck = (
+        ends.groupBy("n")
+        .agg(F.max("out").alias("out"), F.count(F.lit(1)).alias("ends"))
+        .filter((F.col("out") == 1) & (F.col("ends") > 1))
     )
-    return pointed
+    return not stuck.take(1)
+
+
+def star_forest(edges: DataFrame) -> DataFrame:
+    """Converged ``(src, dst)`` edges over ``edges(src, dst)``: one row
+    per vertex that is not its component's minimum, pointing at that
+    minimum. Ids must be orderable and of one type. Raises past
+    ``MAX_ROUNDS`` rounds."""
+    cur = edges.select("src", "dst")
+    for _ in range(MAX_ROUNDS):
+        cur = _small_star(_large_star(_undirected(cur))).localCheckpoint()
+        if _is_star_forest(cur):
+            return cur
+    raise RuntimeError(
+        f"connected components did not converge in {MAX_ROUNDS} rounds"
+    )
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iters: int = 50,
     out_vertex: str = "vertex",
     out_component: str = "component",
 ) -> DataFrame:
     """(vertex, component) for every vertex in ``edges``; component =
-    min vertex id of its connected component. Ids must be orderable
-    (ints or strings). Raises on non-convergence past ``max_iters``
-    (the algorithm's O(log n) bound makes 50 absurdly safe — hitting
-    it means the input violates the contract, e.g. ids mutating
-    between actions)."""
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    )
-    cur = _undirected(e).select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).distinct()
-    cur = cur.localCheckpoint()
-
-    def _sig(df: DataFrame) -> tuple:
-        # bit_xor, not sum: a long-sum of hashes can overflow, which
-        # ANSI mode (Spark 4 default) turns into a runtime error
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
-
-    prev = None
-    for _ in range(max_iters):
-        direct = _undirected(cur)
-        ls = _large_star(direct)
-        # the star ops re-point edges downward; after large-star the
-        # edge list is already directed (big -> small), so small-star
-        # consumes its undirected view the same way
-        ss = _small_star(_undirected(ls))
-        cur = ss.localCheckpoint()
-        sig = _sig(cur)
-        if sig == prev:
-            break
-        prev = sig
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds"
+    min vertex id of its connected component. Ids travel as strings."""
+    forest = star_forest(
+        edges.select(
+            F.col(src).cast("string").alias("src"),
+            F.col(dst).cast("string").alias("dst"),
         )
-    # converged state: every edge is (member -> root). Roots appear
-    # only as dst; emit them as their own component members.
-    members = cur.select(
+    )
+    # every member has one row; roots appear only as dst, so emitting
+    # them as their own component members adds no duplicate
+    members = forest.select(
         F.col("src").alias(out_vertex), F.col("dst").alias(out_component)
     )
-    roots = cur.select(F.col("dst").alias(out_vertex)).distinct().withColumn(
+    roots = forest.select(F.col("dst").alias(out_vertex)).distinct().withColumn(
         out_component, F.col(out_vertex)
     )
-    return members.union(roots).distinct()
+    return members.union(roots)

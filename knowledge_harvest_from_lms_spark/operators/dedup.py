@@ -100,10 +100,10 @@ def cluster_decisions(
     docs: DataFrame, pairs: DataFrame, id_col: str
 ) -> DataFrame:
     """(doc_id, canonical_id, is_duplicate) from dup-pair edges
-    (id_a, id_b): clusters by label propagation (graph.canonical_map,
-    pointer-doubled), lowest doc_id per cluster is the keeper. Ids are
-    zero-padded for the label propagation (its min() is lexicographic)
-    and cast back."""
+    (id_a, id_b): clusters are connected components
+    (graph.canonical_map over the star loop), lowest doc_id per cluster
+    is the keeper. Ids are zero-padded for the component minimum (it
+    compares strings) and cast back."""
     from .graph import canonical_map
 
     pad = "%020d"
@@ -134,7 +134,7 @@ def dedup_documents_exact(
     docs: DataFrame, text_col: str, id_col: str, prefix_chars: int = 512,
 ) -> DataFrame:
     """Keep/drop decisions over EXACT-duplicate edges only — same
-    cluster machinery (label propagation + min-id keeper), but the
+    cluster machinery (connected components + min-id keeper), but the
     expected output is independently recomputable (identical-prefix
     groups), which is what makes the driver's q37 oracle-verifiable
     (VERDICT r2 item 3)."""
@@ -157,7 +157,7 @@ def dedup_documents_minhash_exact_slice(
     resulting clusters are therefore exactly the identical-gram-set
     groups, which DuckDB recomputes independently (q40's oracle) —
     unlike q37, every reported row has flowed through signatures,
-    banding, bucket joins and label propagation."""
+    banding, bucket joins and connected components."""
     pairs = minhash_near_dup_pairs(
         docs, text_col, id_col, sim_threshold, prefix_chars
     ).filter(F.col("jaccard") >= 1.0 - 1e-12)

@@ -6,8 +6,9 @@ Pipeline:
   1. distinct entity strings from the harvested triples;
   2. MinHash-LSH over character 3-grams (JVM-side xxhash64, no Python)
      → near-duplicate pairs above a Jaccard threshold;
-  3. connected groups via iterative label propagation on the pair
-     graph (min-id per component; bounded iterations);
+  3. connected groups via the star loop on the pair graph
+     (operators/components.py: min-id per component, O(log n)
+     rounds whatever the component's shape);
   4. canonical id = xxhash64(canonical string) — deterministic across
      runs and partitionings (no monotonically_increasing_id);
   5. edges aggregated with a single hash groupBy — map-side partial
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from . import bitsets
+from .components import star_forest
 
 N_MINHASH = 32
 SHINGLE = 3
@@ -241,77 +243,23 @@ def lsh_cross_pairs(
     ).select("ent", "other", "jaccard")
 
 
-def canonical_map(ents: DataFrame, pairs: DataFrame, max_iters: int = 16) -> DataFrame:
-    """(ent, canonical) via min-label propagation + pointer doubling
-    over the similarity graph. Each iteration takes the min over
-    1-hop neighbors, then compresses paths (canonical ← canonical's
-    canonical). With ids ordered along a chain that reaches distance
-    ~2^k after k iterations, but convergence is DATA-dependent: a
-    hypothesis property test (tests/test_dedup_properties.py) found
-    adversarially permuted ids where even an 18-node chain needs more
-    than 4 productive iterations (r3 — the old default of 5 warned on
-    real inputs). The budget is therefore generous; the early break
-    makes converged runs pay only for the iterations they use, plus
-    one no-change detection pass. Non-convergence warns rather than
-    silently splitting a component (ADVICE r1).
+def canonical_map(ents: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(ent, canonical): canonical = the minimum ent of its connected
+    component in the similarity graph ``pairs(ent_a, ent_b)``, whose
+    ends are ``ents`` values; an ent in no pair maps to itself.
 
-    The undirected edge list is localCheckpointed once, before the
-    loop, so ``pairs`` (for LSH callers: the band join, the id
-    back-joins and their dedup) is evaluated once however many
-    iterations run. Each iteration's checkpoint carries the previous
-    label in the row (``_old``); convergence is a ``take(1)`` over that
-    checkpoint, with no join against the old labels."""
-    import warnings
-
-    edges = (
-        pairs.select(F.col("ent_a").alias("x"), F.col("ent_b").alias("y"))
-        .union(pairs.select(F.col("ent_b").alias("x"), F.col("ent_a").alias("y")))
-        .localCheckpoint()
+    The components come from the star loop
+    (``components.star_forest``): O(log n) rounds whatever the
+    component's shape, so long or adversarially ordered chains end in
+    one label. This step only left-joins ``ents`` to the converged
+    member → root edges. The loop reads ``pairs`` once (for LSH
+    callers: the band join, the id back-joins and their dedup)."""
+    roots = star_forest(
+        pairs.select(F.col("ent_a").alias("src"), F.col("ent_b").alias("dst"))
+    ).select(F.col("src").alias("ent"), F.col("dst").alias("_root"))
+    return ents.join(roots, "ent", "left").select(
+        "ent", F.coalesce("_root", "ent").alias("canonical")
     )
-    labels = ents.select("ent", F.col("ent").alias("canonical"))
-    converged = False
-    for _ in range(max_iters):
-        neigh = (
-            edges.join(labels, edges.y == labels.ent)
-            .groupBy("x")
-            .agg(F.min("canonical").alias("n_min"))
-        )
-        new = labels.join(neigh, labels.ent == neigh.x, "left").select(
-            "ent",
-            F.col("canonical").alias("_old"),
-            F.least(
-                F.col("canonical"), F.coalesce("n_min", F.col("canonical"))
-            ).alias("canonical"),
-        )
-        # pointer doubling: jump to the canonical's own canonical —
-        # logarithmic convergence on chains
-        jump = new.select(
-            F.col("ent").alias("_c"), F.col("canonical").alias("_cc")
-        )
-        new = (
-            new.join(jump, new.canonical == jump._c, "left")
-            .select(
-                "ent",
-                "_old",
-                F.least(
-                    F.col("canonical"), F.coalesce("_cc", F.col("canonical"))
-                ).alias("canonical"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new.filter(F.col("canonical") != F.col("_old")).take(1)
-        labels = new.select("ent", "canonical")
-        if not changed:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"canonical_map did not converge within {max_iters} iterations; "
-            "some components may carry multiple canonical ids",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
 
 
 def _raw_edges(triples: DataFrame) -> DataFrame:
@@ -414,8 +362,8 @@ def merge_into_graph(
        crash boundary can still split — the full closure is an Iceberg
        transactional commit of vertices+edges+ledger).
     3. Only the remaining unlinked forms cluster among themselves
-       (MinHash-LSH candidate pairs + pointer-doubled label
-       propagation — same kernel as materialize_graph).
+       (MinHash-LSH candidate pairs + canonical_map's star loop —
+       same kernel as materialize_graph).
     4. Edges aggregate on the resolved endpoints and merge with the
        existing edge table by key: weights and mention counts sum.
 
@@ -523,10 +471,11 @@ def pagerank(
     training-data pipeline uses it to prioritize high-centrality
     entities/triples for review or retention).
 
-    Iterative DataFrame joins, same execution shape as canonical_map:
-    per iteration one (edges ⋈ ranks) shuffle on dst plus a scalar
-    dangling-mass aggregate, with an eager localCheckpoint cutting the
-    lineage so plan depth stays O(1) per iteration. Rank mass from a
+    Iterative DataFrame joins, checkpointed per round like the star
+    loop behind canonical_map: per iteration one (edges ⋈ ranks)
+    shuffle on dst plus a scalar dangling-mass aggregate, with an eager
+    localCheckpoint cutting the lineage so plan depth stays O(1) per
+    iteration. Rank mass from a
     node follows its outgoing edges proportionally to weight; nodes
     with no outgoing edges (dangling) redistribute uniformly —
     standard damped PageRank, Σ rank = 1 at every iteration.

@@ -91,14 +91,39 @@ def _ordered_sets(df: DataFrame, id_col: str, set_col: str) -> DataFrame:
     )
 
 
-def _verified(
-    cand: DataFrame, sets: DataFrame, t: float, sim, out_a: str, out_b: str,
-    out_sim: str,
+def _prefix_join(
+    df: DataFrame, id_col: str, set_col: str, t: float, right_toks, pair, sim,
+    out_a: str, out_b: str, out_sim: str,
 ) -> DataFrame:
-    """The verify tail of both joins: each candidate ``(__ia, __ib)``
-    joined to the two records' bitset encodings (``bitsets``), kept
-    where ``sim(|A ∩ B|, |A|, |B|) >= t`` — the unrounded int/int
-    division — and published rounded at 9."""
+    """The body of both joins. Each record's rarest-first prefix
+    (``_prefix``) joins the ``right_toks`` of every record on a shared
+    token under the ``pair`` predicate over (__ia, __sa, __ib, __sb);
+    each distinct candidate is then joined to the two records' bitset
+    encodings (``bitsets``) and kept where ``sim(|A ∩ B|, |A|, |B|) >=
+    t`` — the unrounded int/int division — and published rounded at 9.
+
+    Building the plan runs no Spark job. The sets feed the prefix
+    stream, the dictionary and the encoding; those consumers share
+    their shuffle output through exchange reuse, not a checkpoint, so
+    the returned frame recomputes after an executor is lost."""
+    sets = _ordered_sets(
+        df.filter(F.col(id_col).isNotNull()), id_col, set_col
+    ).filter(F.col("sz") > 0)
+    left = sets.select(
+        F.col("__id").alias("__ia"),
+        F.col("sz").alias("__sa"),
+        F.explode(_prefix(t)).alias("__pa"),
+    )
+    right = sets.select(
+        F.col("__id").alias("__ib"),
+        F.col("sz").alias("__sb"),
+        F.explode(right_toks).alias("__pb"),
+    )
+    cand = (
+        left.join(right, pair & (F.col("__pa") == F.col("__pb")))
+        .select("__ia", "__ib")
+        .distinct()
+    )
     enc = bitsets.encode(
         sets.select("__id", F.explode("toks").alias("tok")), ["__id"], "tok"
     )
@@ -114,6 +139,21 @@ def _verified(
             F.round(s, 9).alias(out_sim),
         )
     )
+
+
+def _threshold(threshold: float) -> float:
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0,1], got {threshold}")
+    return float(threshold)
+
+
+def _prefix(t: float):
+    """A record's first ``|x| - ceil(t*|x|) + 1`` tokens: the prefix
+    any record it reaches similarity t with must share a token with."""
+    p = (F.col("sz") - F.ceil(F.lit(t) * F.col("sz") - F.lit(1e-9)) + 1).cast(
+        "int"
+    )
+    return F.slice("toks", F.lit(1), p)
 
 
 def setsim_self_join(
@@ -134,48 +174,18 @@ def setsim_self_join(
     excluded (an empty set has no similarity-1 twin under Jaccard's
     0/0 convention and would emit no prefix anyway).
 
-    Building the plan runs no Spark job. The sets feed the prefix
-    stream, the dictionary and the encoding; those consumers share
-    their shuffle output through exchange reuse, not a checkpoint, so
-    the returned frame recomputes after an executor is lost."""
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0,1], got {threshold}")
-    t = float(threshold)
-    sets = _ordered_sets(
-        df.filter(F.col(id_col).isNotNull()), id_col, set_col
-    ).filter(F.col("sz") > 0)
-
-    p = (F.col("sz") - F.ceil(F.lit(t) * F.col("sz") - F.lit(1e-9)) + 1).cast(
-        "int"
-    )
-    prefix = sets.select(
-        "__id", "sz", F.explode(F.slice("toks", F.lit(1), p)).alias("ptok")
-    )
-    left = prefix.select(
-        F.col("__id").alias("__ia"),
-        F.col("sz").alias("__sa"),
-        F.col("ptok").alias("__pa"),
-    )
-    right = prefix.select(
-        F.col("__id").alias("__ib"),
-        F.col("sz").alias("__sb"),
-        F.col("ptok").alias("__pb"),
-    )
-    cand = (
-        left.join(
-            right,
-            (F.col("__ia") < F.col("__ib"))
-            & (
-                F.least("__sa", "__sb")
-                >= F.lit(t) * F.greatest("__sa", "__sb")
-            )
-            & (F.col("__pa") == F.col("__pb")),
-        )
-        .select("__ia", "__ib")
-        .distinct()
-    )
-    return _verified(
-        cand, sets, t, lambda n, na, nb: n / (na + nb - n), out_a, out_b, out_sim
+    Both sides join on their prefixes, under ``id_a < id_b`` and the
+    lossless length filter ``least(|a|,|b|) >= t*greatest``. Building
+    the plan runs no Spark job, and the returned frame recomputes
+    after executor loss (``_prefix_join``)."""
+    t = _threshold(threshold)
+    return _prefix_join(
+        df, id_col, set_col, t,
+        right_toks=_prefix(t),
+        pair=(F.col("__ia") < F.col("__ib"))
+        & (F.least("__sa", "__sb") >= F.lit(t) * F.greatest("__sa", "__sb")),
+        sim=lambda n, na, nb: n / (na + nb - n),
+        out_a=out_a, out_b=out_b, out_sim=out_sim,
     )
 
 
@@ -211,36 +221,12 @@ def containment_join(
 
     As for ``setsim_self_join``, building the plan runs no Spark job,
     and the returned frame recomputes after executor loss."""
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0,1], got {threshold}")
-    t = float(threshold)
-    sets = _ordered_sets(
-        df.filter(F.col(id_col).isNotNull()), id_col, set_col
-    ).filter(F.col("sz") > 0)
-
-    p = (F.col("sz") - F.ceil(F.lit(t) * F.col("sz") - F.lit(1e-9)) + 1).cast(
-        "int"
-    )
-    left = sets.select(
-        F.col("__id").alias("__ia"),
-        F.col("sz").alias("__sa"),
-        F.explode(F.slice("toks", F.lit(1), p)).alias("__pa"),
-    )
-    right = sets.select(
-        F.col("__id").alias("__ib"),
-        F.col("sz").alias("__sb"),
-        F.explode("toks").alias("__pb"),
-    )
-    cand = (
-        left.join(
-            right,
-            (F.col("__ia") != F.col("__ib"))
-            & (F.col("__sb") >= F.lit(t) * F.col("__sa"))
-            & (F.col("__pa") == F.col("__pb")),
-        )
-        .select("__ia", "__ib")
-        .distinct()
-    )
-    return _verified(
-        cand, sets, t, lambda n, na, nb: n / na, out_a, out_b, out_sim
+    t = _threshold(threshold)
+    return _prefix_join(
+        df, id_col, set_col, t,
+        right_toks=F.col("toks"),
+        pair=(F.col("__ia") != F.col("__ib"))
+        & (F.col("__sb") >= F.lit(t) * F.col("__sa")),
+        sim=lambda n, na, nb: n / na,
+        out_a=out_a, out_b=out_b, out_sim=out_sim,
     )

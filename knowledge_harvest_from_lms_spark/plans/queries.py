@@ -53,8 +53,9 @@ _GRAM_LIST = (
 
 def _reach_cte(nodes_cte: str, key: str) -> str:
     """Recursive min-reachable-id fixpoint over an ``edges(x, y)`` CTE
-    — the SQL twin of canonical_map's label propagation, shared by
-    q38/q43/q45."""
+    — the SQL twin of canonical_map's connected components (an
+    independent fixpoint formulation, not a replay of the star rounds),
+    shared by q38/q43/q45."""
     return (
         f"reach AS (\n"
         f"  SELECT {key}, {key} AS lbl FROM {nodes_cte}\n"
@@ -1355,8 +1356,8 @@ FROM scored
 
 def q43_canonical_components(spark, sf_dir):
     """Connected components over a deterministic levenshtein<=1
-    similarity graph, computed by the REAL pointer-doubled
-    label-propagation operator (canonical_map, operators/graph.py:128)
+    similarity graph, computed by the REAL operator (canonical_map,
+    operators/graph.py, over the star loop of operators/components.py)
     — the iterative kernel behind the q37/q38 keep/drop clusters and
     q98's entity canonicalization. Late-r3: the iterative operator
     itself gets a direct hash oracle — DuckDB recomputes
@@ -1393,7 +1394,7 @@ def q43_canonical_components(spark, sf_dir):
     return canonical_map(ents, pairs).select("ent", "canonical")
 
 
-# min-reachable-id via recursive CTE == min-label propagation's fixpoint
+# min-reachable-id via recursive CTE == the component minimum
 Q43_SQL = f"""
 WITH RECURSIVE toks AS (
   SELECT DISTINCT t AS ent FROM (
@@ -1669,10 +1670,10 @@ FROM (SELECT * FROM star UNION ALL SELECT * FROM expanded)
 
 def q37_dedup_documents(spark, sf_dir):
     """Document keep/drop decisions over EXACT-duplicate edges via the
-    REAL cluster machinery (pointer-doubled label propagation + min-id
-    keeper). r3: oracle-verifiable — DuckDB recomputes the expected
-    clusters independently as identical-prefix groups (full hash
-    check, was rows-only). MinHash near-dup clustering keeps its
+    REAL cluster machinery (connected components via the star loop +
+    min-id keeper). r3: oracle-verifiable — DuckDB recomputes the
+    expected clusters independently as identical-prefix groups (full
+    hash check, was rows-only). MinHash near-dup clustering keeps its
     rows-only entry as q38 plus planted/property pytest coverage."""
     from ..operators.dedup import dedup_documents_exact
 
@@ -1695,7 +1696,7 @@ def q38_dedup_documents_minhash(spark, sf_dir):
     pair set brute-force (q93's oracle, recall-1.0 argument documented
     there) and resolves clusters with a recursive-CTE
     min-reachable-id fixpoint, so the FULL near-dup keep/drop
-    pipeline (banding → pair verify → label propagation → min-id
+    pipeline (banding → pair verify → connected components → min-id
     keeper) is equality-checked, not just its exact-dup slice
     (q37/q40)."""
     from ..operators.dedup import dedup_documents
@@ -1730,7 +1731,7 @@ def q40_minhash_exact_clusters(spark, sf_dir):
     equality oracle for the q93 machinery (was the last rows-only gap
     flagged in ROADMAP item 6). Every row has flowed through xxhash64
     signatures, threshold-aware banding, bucket joins, star edges and
-    pointer-doubled label propagation; the oracle recomputes the
+    connected components; the oracle recomputes the
     expected clusters independently as identical-3-gram-set groups,
     which the slice provably equals (identical gram sets ⇒ identical
     signatures ⇒ candidates in every band)."""
@@ -2031,8 +2032,8 @@ ORDER BY modality
 
 def q45_graph_materialize_text(spark, sf_dir):
     """The FULL graph-materialize path (q98's machinery: consecutive-
-    slot edges → MinHash-LSH candidate pairs → pointer-doubled label
-    propagation → canonical edge aggregation) equality-checked
+    slot edges → MinHash-LSH candidate pairs → connected components
+    via the star loop → canonical edge aggregation) equality-checked
     end-to-end on its text keys. r3-late: the only reason q98 stayed
     rows-only was its xxhash64 vertex ids (DuckDB has no matching
     hash); projecting the text keys makes everything else
@@ -2086,10 +2087,11 @@ def q46_pagerank(spark, sf_dir):
     importance for the materialized KG, as iterative DataFrame joins
     (operators/graph.py::pagerank; one edges⋈ranks shuffle + a scalar
     dangling aggregate per iteration, eager-localCheckpointed like
-    canonical_map). r3-late: hash-oracle-checked — the operator runs
-    a FIXED iteration count, so the DuckDB oracle unrolls the same 5
-    damped iterations as chained CTEs (recursive CTEs cannot
-    aggregate, unrolling sidesteps that) over q23's replayed triples;
+    the star loop behind canonical_map). r3-late: hash-oracle-checked
+    — the operator runs a FIXED iteration count, so the DuckDB oracle
+    unrolls the same 5 damped iterations as chained CTEs (recursive
+    CTEs cannot aggregate, unrolling sidesteps that) over q23's
+    replayed triples;
     ranks rounded to 6 decimals on both sides. Accepted residual
     hazard, shared with every rounded-double oracle in this file
     (q41/q94/...): a value landing within ~1e-15 of a 5e-7 rounding

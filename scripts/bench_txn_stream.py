@@ -6,7 +6,7 @@ BENCH_ekar487.json) proves the beam at 487 relations; THIS script
 proves the same width through the STREAMING path with `txn=True` —
 every micro-batch commits ledger + vertices + edges + band/variant
 indexes as ONE TxnLog generation, and the incremental graph merge
-(linking, LSH banding, label propagation) runs per drop. That is the
+(linking, LSH banding, connected components) runs per drop. That is the
 production posture the README advertises, so its width limit needs
 its own evidence: driver-side rel_info maps, per-relation grounding
 masks, the graph merge's link/cluster joins, and the commit manifest

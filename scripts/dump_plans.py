@@ -26,11 +26,11 @@ SHOW = {
     "q34_entity_mentions": "SINGLE corpus scan; n-grams projected in the scan; entity side broadcast; shuffles carry only (ent,salt,url)",
     "q35_salted_skew_join": "skew-safe shuffle join: probe salted by hash(url), entity side exploded x salt",
     "q36_bpe_token_count": "regexp_count stays in whole-stage codegen; partial+final agg",
-    "q37_dedup_documents": "exact-dup star edges from ONE window over prefix groups; label propagation joins only (ent, canonical) pairs",
+    "q37_dedup_documents": "exact-dup star edges from ONE window over prefix groups; the star loop re-points only (member, root) edges",
     "q92_simhash_pairs": "r3 portable SimHash: NO Python eval nodes anywhere — explode+hash in codegen, 60 SUMs partial+final, pigeonhole chunk self-joins on (chunk,id,sig)",
     "q39_entity_mentions_punct": "punct word mode keeps the single-scan shape: regex split in the scan projection",
     "q44_entity_linking": "two-stage link: exact normalized equi-join, then deletion-variant equi-join over ONLY the unlinked remainder — no nested-loop fuzzy product; per-mention best via WindowGroupLimit",
-    "q45_graph_materialize_text": "full graph materialize: banded LSH bucket equi-joins (no all-pairs), label-prop iterations pre-collapsed by localCheckpoint, single hash agg for edges (map-side partial combine)",
+    "q45_graph_materialize_text": "full graph materialize: banded LSH bucket equi-joins (no all-pairs), star rounds pre-collapsed by localCheckpoint, single hash agg for edges (map-side partial combine)",
     "q46_pagerank": "iterative rank propagation: plan depth O(1) per iteration (eager localCheckpoint cuts lineage — the final plan shows only the LAST iteration's join+agg over checkpointed scans)",
     "q96_ann_lsh_topk": "r4 soundness form: LSH probe side broadcast per table; the audit's exact-cosine recompute joins only the REPORTED (query,item) pairs back to the corpus (k x queries rows, never all-pairs), posexplode stays in codegen",
     "q99_ann_ivf_topk": "IVF: sampled KMeans fit, centroid table broadcast, probes join only n_probe/n_lists of the corpus; same reported-pairs-only audit join as q96",
@@ -60,7 +60,7 @@ SHOW = {
     "q73_setsim_exact_pairs": "r5 exact set-similarity join: NO cartesian/nested-loop node — prefix tokens (each record's RAREST (1-t)|x|+1, skew-light by construction) equi-join with id order + lossless size-ratio bound IN the join condition; exact jaccard verify joins arrays back for CANDIDATE pairs only; rarest-first order is per-row sort_array(struct(df,token)), no global rank window",
     "q74_group_split": "r5 leakage-safe split: assignment is a scan-fused hash CASE projection (zero exchange for the decision itself); the only shuffle is the per-(user,split) count agg the query adds on top",
     "q75_cap_per_group": "r5 per-group quota cap: row_number over (avalanche hash, id) compiles to WindowGroupLimit Partial below the exchange — a hot host ships ~n rows per input partition, not its whole crawl",
-    "q76_connected_components": "r5 connected components: O(log n) alternating star rounds; eager localCheckpoint per round keeps the FINAL plan depth O(1) (the dump shows only the last round's aggregates over checkpointed scans, the pagerank discipline); min-neighbor aggregate partial+final so hubs collapse map-side",
+    "q76_connected_components": "r5 connected components: O(log n) alternating star rounds; eager localCheckpoint per round keeps the FINAL plan depth O(1) (the dump shows only the converged forest's checkpointed scan, the pagerank discipline); per round two min-neighbor windows partitioned by node and one distinct; the loop stops on a round whose own output is a star forest, with no confirming round",
     "q77_corpus_drift": "r5 drift gate: each snapshot is ONE map-side-combining aggregate on a WHEN-chain bucket id fused into its scan; the k-row sides join a broadcast k-row bucket spine (empty buckets still report); PSI/KL terms pure Column math",
     "q78_bloom_pruned_join": "r5 bloom-pruned join: build side collapses to m/64 bitmap-word rows via bit_or partials; the probe scan gains a literal-array filter (NO extra exchange or join node) and the exact join then sees only survivors",
     "q79_kcore": "r5 k-core peel: per round one degree aggregate (partial+final) + LEFT SEMI joins against the shrinking survivor set; eager localCheckpoint keeps final plan depth O(1)",

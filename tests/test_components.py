@@ -1,13 +1,15 @@
 """Connected components via alternating large-star/small-star
 (operators/components.py): pinned against an independent driver-side
-union-find on random graphs, adversarial chains, and against
-graph.canonical_map on its own home turf."""
+union-find on random graphs and adversarial chains; graph.canonical_map,
+which labels entities from the same loop, is pinned against the
+union-find too, isolated entities included, and held to a job budget."""
 
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from knowledge_harvest_from_lms_spark.operators import components
 from knowledge_harvest_from_lms_spark.operators.components import (
     connected_components,
 )
@@ -108,12 +110,46 @@ def test_matches_canonical_map_on_pair_graphs(spark):
             pdf, src="ent_a", dst="ent_b"
         ).collect()
     }
-    # canonical_map also labels isolated ents (as themselves); compare
-    # on the edge-touched subset, where both must agree exactly
-    assert cc == {e: c for e, c in cm.items() if e in cc}
+    assert cc == _union_find(pairs)
+    # on the edge-touched subset both agree exactly; every other ent
+    # (isolated) maps to itself
+    isolated = set(ents) - set(cc)
+    assert isolated
+    assert cm == {**{e: e for e in isolated}, **cc}
 
 
-def test_max_iters_guard(spark):
+def test_max_iters_guard(spark, monkeypatch):
+    monkeypatch.setattr(components, "MAX_ROUNDS", 0)
     df = spark.createDataFrame([("a", "b")], "src string, dst string")
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(df, max_iters=0)
+        connected_components(df)
+
+
+def test_canonical_map_star_graph_job_count(spark):
+    """A star-shaped dedup pair graph (every member paired with its
+    group minimum, as ``dedup.exact_dup_star_edges`` emits) is already
+    the converged forest: the star loop stops after ONE round, checked
+    on that round's own output, with no confirming round. One round is
+    its three shuffle stages (two window partitions, one distinct) and
+    the checkpoint, plus the check's shuffle and take: six jobs."""
+    from knowledge_harvest_from_lms_spark.operators.graph import canonical_map
+
+    groups = [[f"d{g}{i:02d}" for i in range(1 + g * 3)] for g in range(6)]
+    ents = spark.createDataFrame(
+        [(d,) for grp in groups for d in grp], "ent string"
+    ).localCheckpoint(eager=True)
+    pairs = spark.createDataFrame(
+        [(grp[0], d) for grp in groups for d in grp[1:]],
+        "ent_a string, ent_b string",
+    ).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "canonical-map-jobs"
+    sc.setJobGroup(group, "canonical_map")
+    try:
+        cmap = canonical_map(ents, pairs)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {r.ent: r.canonical for r in cmap.collect()}
+    assert got == {d: grp[0] for grp in groups for d in grp}
+    assert len(jobs) <= 6

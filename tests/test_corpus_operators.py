@@ -230,9 +230,9 @@ def test_graph_ternary_consecutive_slot_edges(spark):
 
 
 def test_canonical_map_long_chain_converges(spark):
-    """Pointer doubling: a 12-hop near-duplicate chain collapses to one
-    canonical id within max_iters=5 (ADVICE r1: the 1-hop-only loop
-    silently split chains longer than 5)."""
+    """A 12-hop near-duplicate chain collapses to one canonical id,
+    with no warning (ADVICE r1: the 1-hop-only loop silently split
+    chains longer than 5)."""
     import warnings
 
     from knowledge_harvest_from_lms_spark.operators.graph import canonical_map
@@ -285,17 +285,17 @@ def test_char_shingles_match_python_reference(spark):
 
 
 def test_canonical_map_evaluates_pairs_once(spark):
-    """The edge list is materialized before the loop: ``pairs`` is
-    evaluated once per union branch, however many label-propagation
-    iterations the graph needs."""
+    """The star loop reads ``pairs`` in one pass (both edge directions
+    come from one explode, not a union), so the pair rows are evaluated
+    once however many rounds the graph needs."""
     import warnings
 
     from pyspark.sql.types import StringType
 
     from knowledge_harvest_from_lms_spark.operators.graph import canonical_map
 
-    # ids decrease along the chain's odd steps, so pointer doubling
-    # needs more than 2 iterations (checked by the warning below)
+    # ids alternate along the chain, so the star loop needs more than
+    # one round
     order = [0, 9, 1, 8, 2, 7, 3, 6, 4, 5]
     names = [f"ent{i:02d}" for i in order]
     ents = spark.createDataFrame([(n,) for n in names], "ent string")
@@ -303,9 +303,6 @@ def test_canonical_map_evaluates_pairs_once(spark):
         [(names[i], names[i + 1]) for i in range(len(names) - 1)],
         "ent_a string, ent_b string",
     )
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        canonical_map(ents, raw, max_iters=2).collect()
-
     seen = spark.sparkContext.accumulator(0)
 
     def count(v):
@@ -319,7 +316,7 @@ def test_canonical_map_evaluates_pairs_once(spark):
         warnings.simplefilter("error", RuntimeWarning)
         cmap = {r.ent: r.canonical for r in canonical_map(ents, pairs).collect()}
     assert set(cmap.values()) == {"ent00"}
-    assert seen.value == 2 * (len(names) - 1)
+    assert seen.value == len(names) - 1
 
 
 def test_entity_mentions_grounding(spark, pages):

@@ -218,10 +218,11 @@ def test_q92_simhash_plan_is_pure_jvm(spark):
 
 def test_q37_cluster_plan_shuffles_ids_only(spark):
     """Exact-dup cluster decisions: the edge stage is a single window
-    over prefix groups with no Python nodes. (The final q37 df is a
-    checkpointed-RDD scan — canonical_map localCheckpoints each
-    label-propagation iteration — so the shape guard targets the edge
-    stage plan, which is what runs against the corpus.)"""
+    over prefix groups with no Python nodes. (The final q37 df joins
+    the documents to a checkpointed-RDD scan — the star loop behind
+    canonical_map localCheckpoints each round — so the shape guard
+    targets the edge stage plan, which is what runs against the
+    corpus.)"""
     from pyspark.sql import functions as F
 
     from knowledge_harvest_from_lms_spark.operators.dedup import exact_dup_star_edges
