@@ -148,10 +148,10 @@ def main() -> None:
     headline_value = round(sum(timings.values()), 3)
 
     # ekar-scale beam regression (VERDICT r2 item 6): 50 real ekar
-    # relations end-to-end on the stub — exercises the beam + the
-    # broadcast-threshold pruning join at a relation count two orders
-    # above the fixture world. Single shot (it IS the cold number; a
-    # driver OOM or a non-broadcast threshold plan would blow this up).
+    # relations end-to-end on the stub — exercises the beam and its
+    # grouped per-level prune-and-threshold step at a relation count
+    # two orders above the fixture world. Single shot (it IS the cold
+    # number; a driver OOM or a per-level plan blow-up would show here).
     ekar_stats: dict[str, float] = {}
     ekar_path = "/root/reference/relation_info/ekar_aggr.json"
     if os.path.exists(ekar_path):

@@ -7,7 +7,8 @@ numbers for every registry entry, not just the headline set. Each
 query is executed twice against $SPARK_GRAFT_SF_DIR (default sf0.1)
 with `df.write.format("noop")` so the computation is timed, not the
 sink; the JSON line reports both samples (first = cold-within-session,
-second = warm).
+second = warm) and, per sample, the Spark jobs of its job group (plan
+build and run together).
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench_extra.py [name ...]
 """
@@ -30,18 +31,22 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     names = sys.argv[1:] or list(QUERIES)
     spark = get_session(cpus=cpus, app_name="bench-extra-sweep")
+    sc = spark.sparkContext
     out: dict[str, list[float]] = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-        samples = []
-        for _ in range(2):
+        samples, jobs = [], []
+        for i in range(2):
+            group = f"bench_extra:{name}:{i}"
+            sc.setJobGroup(group, f"bench_extra:{name}")
             t0 = time.monotonic()
             QUERIES[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             samples.append(round(time.monotonic() - t0, 3))
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         out[name] = samples
-        print(json.dumps({"query": name, "sec": samples}), flush=True)
+        print(json.dumps({"query": name, "sec": samples, "jobs": jobs}), flush=True)
+    sc.setLocalProperty("spark.jobGroup.id", None)
     warm_total = round(sum(s[-1] for s in out.values()), 3)
     print(
         json.dumps(

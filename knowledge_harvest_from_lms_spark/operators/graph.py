@@ -213,10 +213,13 @@ def lsh_cross_pairs(
 ) -> DataFrame:
     """probe(ent) × build(ent) → (ent, other, jaccard) near-dup pairs
     ACROSS the two sides only (no probe-probe or build-build pairs) —
-    the same banding/verification as lsh_candidate_pairs, but the
-    bucket join is probe-vs-build, so linking a small new-drop
-    entity set against a huge existing vertex table never pays the
-    vertex-table self-join.
+    the same minhash buckets as lsh_candidate_pairs, but the bucket
+    join is probe-vs-build, so linking a small new-drop entity set
+    against a huge existing vertex table never pays the vertex-table
+    self-join. Pairs are verified with ``array_intersect`` over the
+    stored gram arrays, not ``bitsets``: every ``bitsets.encode`` call
+    ranks its own dictionary, so bit positions from two appends of the
+    band index, or from probe vs build, would not line up.
 
     ``build_banded``: a persisted ``build_vertex_band_index`` table
     for the build side; when given, ``build`` is not scanned and only
@@ -466,28 +469,31 @@ def pagerank(
     damping: float = 0.85,
     weight_col: str = "weight",
 ) -> DataFrame:
-    """Weighted PageRank over a directed edge list (src, dst, weight)
-    — entity-importance ranking for the materialized KG (a
-    training-data pipeline uses it to prioritize high-centrality
-    entities/triples for review or retention).
+    """Weighted PageRank over a directed edge list (src, dst, weight):
+    entity importance for the materialized KG. Rank mass follows
+    out-edges in proportion to weight; dangling nodes (no out-edge)
+    spread theirs uniformly — standard damped PageRank, Σ rank = 1 at
+    every iteration. A NULL node joins no edge, so it neither passes
+    nor redistributes mass.
 
-    Iterative DataFrame joins, checkpointed per round like the star
-    loop behind canonical_map: per iteration one (edges ⋈ ranks)
-    shuffle on dst plus a scalar dangling-mass aggregate, with an eager
-    localCheckpoint cutting the lineage so plan depth stays O(1) per
-    iteration. Rank mass from a
-    node follows its outgoing edges proportionally to weight; nodes
-    with no outgoing edges (dangling) redistribute uniformly —
-    standard damped PageRank, Σ rank = 1 at every iteration.
+    One checkpointed node frame ``(node, out_w, dangling)`` from one
+    groupBy over both edge ends. Per iteration the (edges ⋈ ranks)
+    messages ``p · rank`` and the rank rows, which carry ``dangling``,
+    meet in one groupBy on node; the dangling mass is a one-row
+    aggregate broadcast into that update, so the loop never
+    round-trips to the driver; an eager localCheckpoint keeps plan
+    depth O(1).
 
     Fixed ``iters`` (not convergence detection): the q46 DuckDB oracle
     replays the exact same number of unrolled iterations, making the
     iterative operator equality-checkable without recursive-CTE
     aggregation (which SQL recursion disallows)."""
     nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
+        edges.select(F.col("src").alias("node"), weight_col, F.lit(True).alias("out"))
+        .union(edges.select("dst", F.lit(None), F.lit(False)))
+        .groupBy("node")
+        .agg(F.sum(weight_col).alias("out_w"),
+             (F.col("node").isNotNull() & ~F.max("out")).alias("dangling"))
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
@@ -495,37 +501,28 @@ def pagerank(
         # degenerate harvest (e.g. grounding left no edges): empty
         # ranks, not ZeroDivisionError (review r3)
         return nodes.select("node", F.lit(0.0).alias("rank"))
-    outw = edges.groupBy("src").agg(F.sum(weight_col).alias("out_w"))
     e = (
-        edges.join(outw, "src")
+        edges.join(nodes.select(F.col("node").alias("src"), "out_w"), "src")
+        .where(F.col("dst").isNotNull())  # a NULL dst takes no mass
         .select("src", "dst", (F.col(weight_col) / F.col("out_w")).alias("p"))
         .localCheckpoint(eager=True)
     )
-    dangling_nodes = nodes.join(
-        outw.select(F.col("src").alias("node")), "node", "left_anti"
-    ).localCheckpoint(eager=True)
-
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    ranks = nodes.select("node", "dangling", F.lit(1.0 / n).alias("rank"))
+    mass = F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0))
+    rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+        F.coalesce("in_sum", F.lit(0.0)) + F.col("mass") / F.lit(n)
+    )
     for _ in range(iters):
-        dangling = (
-            dangling_nodes.join(ranks, "node").agg(F.sum("rank")).collect()[0][0]
-            or 0.0
-        )
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("p") * F.col("rank")).alias("in_sum"))
+        msgs = e.join(ranks, e.src == ranks.node).select(
+            F.col("dst").alias("node"), F.lit(None).alias("dangling"),
+            (F.col("p") * F.col("rank")).alias("c"),
         )
         ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce("in_sum", F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-            )
+            msgs.union(ranks.select("node", "dangling", F.lit(None)))
+            .groupBy("node")
+            .agg(F.max("dangling").alias("dangling"), F.sum("c").alias("in_sum"))
+            .crossJoin(F.broadcast(ranks.agg(mass.alias("mass"))))
+            .select("node", "dangling", rank.alias("rank"))
             .localCheckpoint(eager=True)
         )
-    return ranks
+    return ranks.select("node", "rank")

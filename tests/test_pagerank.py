@@ -2,6 +2,8 @@
 mass conservation, symmetry, weight proportionality, dangling
 redistribution."""
 
+import random
+
 import pytest
 
 from knowledge_harvest_from_lms_spark.operators.graph import pagerank
@@ -64,3 +66,38 @@ def test_iteration_is_a_contraction(spark):
     late = max(abs(r12[k] - r11[k]) for k in r11)
     assert late < early * 0.5, (early, late)
     assert sum(r12.values()) == pytest.approx(1.0, abs=1e-9)
+
+
+def test_pagerank_empty_edges(spark):
+    df = spark.createDataFrame([], "src string, dst string, weight double")
+    out = pagerank(df)
+    assert out.columns == ["node", "rank"]
+    assert out.count() == 0
+
+
+def test_pagerank_job_count(spark):
+    """The dangling mass stays in the plan: no driver round-trip per
+    iteration. Setup is the node frame (one groupBy), its count and
+    the edge-probability frame, 8 jobs; each iteration is the
+    dangling-mass aggregate and its broadcast, the edges ⋈ ranks
+    shuffles, the one groupBy that sums messages and rank rows, and
+    the checkpoint, 7 jobs (12 when the dangling mass was collected to
+    the driver and the update re-joined the node frame)."""
+    rnd = random.Random(3)
+    edges = spark.createDataFrame(
+        [(f"v{rnd.randrange(60)}", f"v{rnd.randrange(80)}",
+          float(rnd.randint(1, 5))) for _ in range(180)],
+        "src string, dst string, weight double",
+    ).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    jobs = {}
+    for iters in (1, 3):
+        group = f"pagerank-jobs-{iters}"
+        sc.setJobGroup(group, "pagerank")
+        try:
+            pagerank(edges, iters=iters)
+            jobs[iters] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (jobs[3] - jobs[1]) / 2 <= 7, jobs
+    assert jobs[3] <= 29, jobs
