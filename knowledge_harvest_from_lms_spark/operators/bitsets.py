@@ -42,17 +42,19 @@ NW = 8  # bitmap words per set: the top NW*64 tokens take the bit path
 
 
 def encode(
-    postings: DataFrame, keys: list[str], tok: str, *extra_aggs: Column
+    postings: DataFrame, keys: list[str], tok: str, freq: DataFrame, *extra_aggs: Column
 ) -> DataFrame:
     """``keys…, sz, b0..b{NW-1}, ov`` and then ``extra_aggs``, one row
     per set.
 
     ``postings`` holds one row per distinct (keys…, ``tok``) with a
-    non-NULL ``tok``; ``sz`` is the set size. ``extra_aggs`` are more
-    aggregates over the same postings grouped by ``keys`` (the LSH
-    path's minhash MINs), so callers keep a single ``groupBy``."""
+    non-NULL ``tok``; ``sz`` is the set size. ``freq`` (``tok``,
+    ``count``) holds their set frequencies, which rank the dictionary.
+    ``extra_aggs`` are more aggregates over the same postings grouped
+    by ``keys`` (the LSH path's minhash MINs), so callers keep a single
+    ``groupBy``."""
     rank = [F.desc("count"), F.col(tok)]
-    top = postings.groupBy(tok).count().orderBy(*rank).limit(NW * 64)
+    top = freq.orderBy(*rank).limit(NW * 64)
     dic = top.select(tok, (F.row_number().over(W.orderBy(*rank)) - 1).alias("__idx"))
     words = [
         F.expr(

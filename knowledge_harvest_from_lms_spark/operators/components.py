@@ -38,9 +38,11 @@ round (that is its point).
 Output contract: one row per VERTEX that appears in the edge set,
 ``(vertex, component)`` with component = the component's minimum
 vertex id — the canonical-representative convention of
-``canonical_map`` / ``dedup.cluster_decisions``, so downstream
-survivor rules compose unchanged. Isolated vertices never enter an
-edge list; union them in upstream if they must appear.
+``canonical_map``, so downstream survivor rules compose unchanged.
+Isolated vertices never enter an edge list; union them in upstream
+if they must appear. ``dedup.cluster_decisions`` runs the loop over
+text prefixes, not doc ids: the component minimum is a prefix that
+labels the cluster, and the keeper is the cluster's lowest doc id.
 """
 
 from __future__ import annotations

@@ -161,7 +161,7 @@ def lsh_candidate_pairs(
         ]
     )
     enc = (
-        bitsets.encode(post, ["ent"], "gram", *minaggs)
+        bitsets.encode(post, ["ent"], "gram", post.groupBy("gram").count(), *minaggs)
         .withColumn("bks", buckets)
         .drop(*[f"_h{i}" for i in range(n_hashes)])
         .localCheckpoint()
@@ -247,21 +247,25 @@ def lsh_cross_pairs(
 
 
 def canonical_map(ents: DataFrame, pairs: DataFrame) -> DataFrame:
-    """(ent, canonical): canonical = the minimum ent of its connected
-    component in the similarity graph ``pairs(ent_a, ent_b)``, whose
-    ends are ``ents`` values; an ent in no pair maps to itself.
+    """``ents`` plus ``canonical``: the minimum ent of each row's
+    connected component in the similarity graph ``pairs(ent_a,
+    ent_b)``, whose ends are ``ents`` values; an ent in no pair maps to
+    itself. Other columns of ``ents`` ride along, and an ent may
+    repeat (dedup passes one row per document, keyed by its prefix).
 
     The components come from the star loop
     (``components.star_forest``): O(log n) rounds whatever the
     component's shape, so long or adversarially ordered chains end in
     one label. This step only left-joins ``ents`` to the converged
     member → root edges. The loop reads ``pairs`` once (for LSH
-    callers: the band join, the id back-joins and their dedup)."""
+    callers: the band join and its exact verify)."""
     roots = star_forest(
         pairs.select(F.col("ent_a").alias("src"), F.col("ent_b").alias("dst"))
     ).select(F.col("src").alias("ent"), F.col("dst").alias("_root"))
-    return ents.join(roots, "ent", "left").select(
-        "ent", F.coalesce("_root", "ent").alias("canonical")
+    return (
+        ents.join(roots, "ent", "left")
+        .withColumn("canonical", F.coalesce("_root", "ent"))
+        .drop("_root")
     )
 
 

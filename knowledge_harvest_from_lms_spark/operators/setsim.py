@@ -20,7 +20,7 @@ consulted:
    filtering only requires a CONSISTENT total order, so the (df,
    token) pair itself serves as the sort key and the plan never
    creates the single-partition ``row_number`` a dense token-rank
-   port would.
+   port would. The same counts rank the ``bitsets`` dictionary.
 2. **Prefix explode.** A record x with |x| tokens emits its first
    ``p = |x| - ceil(t*|x|) + 1`` tokens (the prefix-filter lemma:
    two records with J >= t must share a token inside both prefixes —
@@ -34,7 +34,8 @@ consulted:
 3. **Candidate equi-join** on the prefix token, ``id_a < id_b`` and
    the lossless length filter ``least(|a|,|b|) >= t*greatest`` in
    the join condition (cheap-first, the repo-wide join-ordering
-   rule), then ``distinct`` pairs.
+   rule), then ``distinct`` pairs: on gram sets a pair meets on many
+   prefix tokens, so dropping repeats per row would cost more.
 4. **Verify** exact Jaccard by joining each record's set, encoded
    once as a ``bitsets`` bitmap plus overflow array, back for the
    candidate pairs only: |union| = |a|+|b|-|inter| (the sets are
@@ -64,51 +65,50 @@ from pyspark.sql import functions as F
 from . import bitsets
 
 
-def _ordered_sets(df: DataFrame, id_col: str, set_col: str) -> DataFrame:
-    """(id, toks array<string> sorted rarest-first, sz) — tokens
-    deduped, ordered by the global (df, token) total order.
+def _prefix_join(
+    df: DataFrame, id_col: str, set_col: str, t: float, right_toks, pair, sim,
+    out_a: str, out_b: str, out_sim: str,
+) -> DataFrame:
+    """The body of both joins. One token-frequency aggregate orders
+    each record's distinct tokens rarest first (``toks``) and ranks the
+    ``bitsets`` dictionary. Each record's prefix (``_prefix``) joins the
+    ``right_toks`` of every record on a shared token under the ``pair``
+    predicate over (__ia, __sa, __ib, __sb); each distinct candidate is
+    joined to both records' encodings and kept where ``sim(|A ∩ B|,
+    |A|, |B|) >= t`` — the unrounded int/int division — and published
+    rounded at 9.
 
-    The deduped set is exploded as an expression, not through a named
-    column: exploding a bare attribute makes the optimizer infer a
+    The set is exploded as an expression, not through a named column:
+    exploding a bare attribute makes the optimizer infer a
     ``size(set) > 0`` filter, and pushdown substitutes the alias into
     it, so a computed ``set_col`` (q73/q80's gram ``transform``) would
-    be evaluated twice per record."""
+    be evaluated twice per record.
+
+    The encoding re-explodes ``toks`` within the list's partitions, so
+    it adds no shuffle; one groupBy for both would be split by column
+    pruning into two record shuffles. Building the plan runs no Spark
+    job; the consumers share the record and token shuffles through
+    exchange reuse, not a checkpoint, so the returned frame recomputes
+    after an executor is lost."""
     tok = df.select(
         F.col(id_col).alias("__id"),
         F.explode(F.array_distinct(F.col(set_col))).alias("tok"),
-    )
-    dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        tok.join(dfreq, "tok")
+    ).filter(F.col("__id").isNotNull() & F.col("tok").isNotNull())
+    freq = tok.groupBy("tok").count()
+    sets = (
+        tok.join(freq, "tok")
         .groupBy("__id")
         .agg(
             F.transform(
-                F.sort_array(F.collect_list(F.struct("df", "tok"))),
+                F.sort_array(F.collect_list(F.struct("count", "tok"))),
                 lambda s: s["tok"],
             ).alias("toks")
         )
         .withColumn("sz", F.size("toks"))
     )
-
-
-def _prefix_join(
-    df: DataFrame, id_col: str, set_col: str, t: float, right_toks, pair, sim,
-    out_a: str, out_b: str, out_sim: str,
-) -> DataFrame:
-    """The body of both joins. Each record's rarest-first prefix
-    (``_prefix``) joins the ``right_toks`` of every record on a shared
-    token under the ``pair`` predicate over (__ia, __sa, __ib, __sb);
-    each distinct candidate is then joined to the two records' bitset
-    encodings (``bitsets``) and kept where ``sim(|A ∩ B|, |A|, |B|) >=
-    t`` — the unrounded int/int division — and published rounded at 9.
-
-    Building the plan runs no Spark job. The sets feed the prefix
-    stream, the dictionary and the encoding; those consumers share
-    their shuffle output through exchange reuse, not a checkpoint, so
-    the returned frame recomputes after an executor is lost."""
-    sets = _ordered_sets(
-        df.filter(F.col(id_col).isNotNull()), id_col, set_col
-    ).filter(F.col("sz") > 0)
+    enc = bitsets.encode(
+        sets.select("__id", F.explode("toks").alias("tok")), ["__id"], "tok", freq
+    )
     left = sets.select(
         F.col("__id").alias("__ia"),
         F.col("sz").alias("__sa"),
@@ -123,9 +123,6 @@ def _prefix_join(
         left.join(right, pair & (F.col("__pa") == F.col("__pb")))
         .select("__ia", "__ib")
         .distinct()
-    )
-    enc = bitsets.encode(
-        sets.select("__id", F.explode("toks").alias("tok")), ["__id"], "tok"
     )
     s = sim(bitsets.intersection("a", "b"), F.col("sz_a"), F.col("sz_b"))
     return (

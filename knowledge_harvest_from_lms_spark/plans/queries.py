@@ -452,7 +452,9 @@ def q14_ngram_jaccard_pairs(spark, sf_dir):
     # one posting pass, localCheckpointed: the dictionary AND the
     # per-doc encodings both derive from it
     post = pre.select("doc_id", "lang", F.explode(g).alias("gram")).localCheckpoint()
-    bm = bitsets.encode(post, ["doc_id", "lang"], "gram").localCheckpoint()
+    bm = bitsets.encode(
+        post, ["doc_id", "lang"], "gram", post.groupBy("gram").count()
+    ).localCheckpoint()
     anchors = bitsets.side(bm.filter(F.col("doc_id") % 50 == 0), "a")
     others = bitsets.side(bm, "b")
     inter = bitsets.intersection("a", "b")
@@ -1629,7 +1631,8 @@ def q93_minhash_dedup_pairs(spark, sf_dir):
     it does (the real near-dups sit at jaccard 0.96-0.99, far above
     the 0.8 banding design point) and which the driver now re-proves
     every round — same argument as q94's embedding oracle; a recall
-    miss would surface as a hash mismatch, not silently."""
+    miss would surface as a hash mismatch, not silently. Each
+    (id_a, id_b) is reported once (``minhash_near_dup_pairs``)."""
     from ..operators.dedup import minhash_near_dup_pairs
 
     docs = _t(spark, sf_dir, "documents")
@@ -1669,12 +1672,13 @@ FROM (SELECT * FROM star UNION ALL SELECT * FROM expanded)
 
 
 def q37_dedup_documents(spark, sf_dir):
-    """Document keep/drop decisions over EXACT-duplicate edges via the
-    REAL cluster machinery (connected components via the star loop +
-    min-id keeper). r3: oracle-verifiable — DuckDB recomputes the
-    expected clusters independently as identical-prefix groups (full
-    hash check, was rows-only). MinHash near-dup clustering keeps its
-    rows-only entry as q38 plus planted/property pytest coverage."""
+    """Document keep/drop decisions over EXACT duplicates: every doc
+    of an identical 512-char prefix group takes the group's min id,
+    one window over the prefix (with no near pairs the cluster
+    machinery's components are exactly these groups, so no component
+    loop runs). r3: oracle-verifiable — DuckDB recomputes the expected
+    clusters independently as identical-prefix groups (full hash
+    check, was rows-only). MinHash near-dup clustering is q38."""
     from ..operators.dedup import dedup_documents_exact
 
     docs = _t(spark, sf_dir, "documents")
@@ -1698,7 +1702,9 @@ def q38_dedup_documents_minhash(spark, sf_dir):
     min-reachable-id fixpoint, so the FULL near-dup keep/drop
     pipeline (banding → pair verify → connected components → min-id
     keeper) is equality-checked, not just its exact-dup slice
-    (q37/q40)."""
+    (q37/q40). The operator pairs and clusters distinct prefixes, and
+    each doc takes its prefix's component; the oracle's doc-id graph
+    has the same components (identical prefixes have jaccard 1)."""
     from ..operators.dedup import dedup_documents
 
     docs = _t(spark, sf_dir, "documents")
@@ -1730,11 +1736,12 @@ def q40_minhash_exact_clusters(spark, sf_dir):
     slice of the FULL MinHash-LSH pipeline — the driver-visible
     equality oracle for the q93 machinery (was the last rows-only gap
     flagged in ROADMAP item 6). Every row has flowed through xxhash64
-    signatures, threshold-aware banding, bucket joins, star edges and
-    connected components; the oracle recomputes the
-    expected clusters independently as identical-3-gram-set groups,
-    which the slice provably equals (identical gram sets ⇒ identical
-    signatures ⇒ candidates in every band)."""
+    signatures, threshold-aware banding, bucket joins over distinct
+    prefixes and connected components of the prefix graph; the
+    oracle recomputes the expected clusters independently as
+    identical-3-gram-set groups, which the slice provably equals
+    (identical gram sets ⇒ identical signatures ⇒ candidates in every
+    band; identical prefixes are one vertex)."""
     from ..operators.dedup import dedup_documents_minhash_exact_slice
 
     docs = _t(spark, sf_dir, "documents")

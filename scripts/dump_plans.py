@@ -26,7 +26,7 @@ SHOW = {
     "q34_entity_mentions": "SINGLE corpus scan; n-grams projected in the scan; entity side broadcast; shuffles carry only (ent,salt,url)",
     "q35_salted_skew_join": "skew-safe shuffle join: probe salted by hash(url), entity side exploded x salt",
     "q36_bpe_token_count": "regexp_count stays in whole-stage codegen; partial+final agg",
-    "q37_dedup_documents": "exact-dup star edges from ONE window over prefix groups; the star loop re-points only (member, root) edges",
+    "q37_dedup_documents": "min-id keeper from ONE window over the 512-char prefix (the shuffle key is the prefix, never the body); no component loop, so building the plan runs no Spark job",
     "q92_simhash_pairs": "r3 portable SimHash: NO Python eval nodes anywhere — explode+hash in codegen, 60 SUMs partial+final, pigeonhole chunk self-joins on (chunk,id,sig)",
     "q39_entity_mentions_punct": "punct word mode keeps the single-scan shape: regex split in the scan projection",
     "q44_entity_linking": "two-stage link: exact normalized equi-join, then deletion-variant equi-join over ONLY the unlinked remainder — no nested-loop fuzzy product; per-mention best via WindowGroupLimit",

@@ -45,7 +45,9 @@ def test_encode_and_intersection_match_python_sets(spark):
     post = spark.createDataFrame(
         [(i, t) for i, s in sets.items() for t in sorted(s)], "id long, tok string"
     )
-    enc = bitsets.encode(post, ["id"], "tok", F.min("tok").alias("first"))
+    enc = bitsets.encode(
+        post, ["id"], "tok", post.groupBy("tok").count(), F.min("tok").alias("first")
+    )
     assert enc.columns == (
         ["id", "sz"] + [f"b{w}" for w in range(bitsets.NW)] + ["ov", "first"]
     )

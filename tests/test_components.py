@@ -126,8 +126,8 @@ def test_max_iters_guard(spark, monkeypatch):
 
 
 def test_canonical_map_star_graph_job_count(spark):
-    """A star-shaped dedup pair graph (every member paired with its
-    group minimum, as ``dedup.exact_dup_star_edges`` emits) is already
+    """A star-shaped pair graph (every member paired with its group
+    minimum, the shape of ``dedup.exact_dup_star_edges``) is already
     the converged forest: the star loop stops after ONE round, checked
     on that round's own output, with no confirming round. One round is
     its three shuffle stages (two window partitions, one distinct) and

@@ -1,8 +1,9 @@
 """Property tests for the dedup keep/drop cluster machinery
-(VERDICT r2 item 8): random dup graphs — chains, stars, cliques, mixed
-components over non-contiguous ids — must always collapse to one
-min-id keeper per connected component with no convergence warning,
-and an adversarially ordered long chain must end in one label."""
+(VERDICT r2 item 8): random prefix dup graphs — chains, stars, cliques,
+mixed components, several docs per text and NULL texts, over
+non-contiguous ids — must always collapse to one min-id keeper per
+connected component with no convergence warning, and an adversarially
+ordered long chain must end in one label."""
 
 import warnings
 
@@ -31,23 +32,28 @@ def _components(n_nodes: int, edges: list[tuple[int, int]]) -> dict[int, int]:
 
 @st.composite
 def dup_graphs(draw):
-    """(n_nodes, ids, edges): up to 6 components of shape chain / star
-    / clique (the adversarial long chain has its own test below), over
-    sparse non-contiguous ids."""
+    """(n_nodes, docs, edges): up to 6 components of shape chain / star
+    / clique over text nodes (the adversarial long chain has its own
+    test below); each node is the text of 1-3 docs, and 1-3 more docs
+    have a NULL text. ``docs`` is [(doc_id, node or None)] over sparse,
+    shuffled, non-contiguous ids."""
     n_comps = draw(st.integers(1, 6))
     sizes = [draw(st.integers(1, 18)) for _ in range(n_comps)]
     n_nodes = sum(sizes)
+    copies = draw(st.lists(st.integers(1, 3), min_size=n_nodes, max_size=n_nodes))
+    owners = [i for i in range(n_nodes) for _ in range(copies[i])]
+    owners += [None] * draw(st.integers(1, 3))
     # non-contiguous, shuffled external ids
     gaps = draw(
-        st.lists(st.integers(1, 50), min_size=n_nodes, max_size=n_nodes)
+        st.lists(st.integers(1, 50), min_size=len(owners), max_size=len(owners))
     )
     ids = []
     acc = 0
     for g in gaps:
         acc += g
         ids.append(acc)
-    perm = draw(st.permutations(range(n_nodes)))
-    ids = [ids[p] for p in perm]
+    perm = draw(st.permutations(range(len(owners))))
+    docs = [(ids[p], owner) for p, owner in zip(perm, owners)]
 
     edges = []
     base = 0
@@ -65,7 +71,7 @@ def dup_graphs(draw):
                     (a, b) for i, a in enumerate(nodes) for b in nodes[i + 1:]
                 ][: 4 * size]
         base += size
-    return n_nodes, ids, edges
+    return n_nodes, docs, edges
 
 
 @settings(
@@ -75,32 +81,36 @@ def dup_graphs(draw):
 )
 @given(g=dup_graphs())
 def test_one_min_keeper_per_component(spark, g):
-    n_nodes, ids, edges = g
+    """Each node is a distinct text and the pairs are over those texts:
+    a doc's cluster is its text's component, docs sharing a text are
+    one cluster with no pair between them, and the NULL-text docs form
+    one cluster of their own."""
+    n_nodes, docs, edges = g
     expected = _components(n_nodes, edges)
+    text = lambda node: None if node is None else f"text {node:03d}"  # noqa: E731
 
-    docs = spark.createDataFrame([(ids[i],) for i in range(n_nodes)], "doc_id long")
+    df = spark.createDataFrame(
+        [(d, text(node)) for d, node in docs], "doc_id long, text string"
+    )
     pairs = spark.createDataFrame(
-        [(ids[a], ids[b]) for a, b in edges] or [(ids[0], ids[0])],
-        "id_a long, id_b long",
+        [(text(a), text(b)) for a, b in edges], "ent_a string, ent_b string"
     )
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)  # no convergence warning
-        rows = cluster_decisions(docs, pairs, "doc_id").collect()
+        rows = cluster_decisions(df, pairs, "text", "doc_id", 512).collect()
 
     got = {r.doc_id: (r.canonical_id, r.is_duplicate) for r in rows}
-    assert len(got) == n_nodes
+    assert len(rows) == len(got) == len(docs)
+    cluster = lambda node: "null" if node is None else expected[node]  # noqa: E731
     comp_min = {}
-    for i in range(n_nodes):
-        root = expected[i]
-        comp_min.setdefault(root, min(
-            ids[j] for j in range(n_nodes) if expected[j] == root
-        ))
-    for i in range(n_nodes):
-        want_canon = comp_min[expected[i]]
-        assert got[ids[i]] == (want_canon, ids[i] != want_canon), (ids[i], got[ids[i]])
+    for d, node in docs:
+        comp_min[cluster(node)] = min(d, comp_min.get(cluster(node), d))
+    for d, node in docs:
+        want_canon = comp_min[cluster(node)]
+        assert got[d] == (want_canon, d != want_canon), (d, node, got[d])
     # exactly one keeper per component
     keepers = [d for d, (c, dup) in got.items() if not dup]
-    assert sorted(keepers) == sorted(set(comp_min.values()))
+    assert sorted(keepers) == sorted(comp_min.values())
 
 
 def test_adversarial_chain_one_label_no_warning(spark):
@@ -176,6 +186,67 @@ def test_minhash_pairs_sound_and_exact_complete_via_duckdb(spark):
     exact = {k for k, j in true_jac.items() if j >= 1.0 - 1e-12}
     assert exact, "expected at least one exact-gram-set pair at sf0.001"
     assert exact <= got, exact - got
+
+
+_BASE = (
+    "spark engines shuffle data between executors when joins or "
+    "aggregations repartition by key across the cluster nodes every night"
+)
+# an exact group of three docs, two near-dup prefixes of it with two and
+# three docs, and one unrelated doc
+_PLANTED = (
+    [(d, _BASE) for d in (4, 11, 17)]
+    + [(d, _BASE.replace("executors", "executor")) for d in (2, 9)]
+    + [(d, _BASE.replace("night", "nights")) for d in (6, 13, 20)]
+    + [(30, "a completely different very short text about giraffes")]
+)
+
+
+def test_minhash_pairs_report_each_id_pair_once(spark):
+    """q93's pair list holds each (id_a, id_b) once with no dedup pass:
+    star edges inside each identical-prefix group, and every doc of a
+    near-dup prefix paired with every doc of the other prefix."""
+    from knowledge_harvest_from_lms_spark.operators.dedup import (
+        minhash_near_dup_pairs,
+    )
+
+    docs = spark.createDataFrame(_PLANTED, "doc_id long, text string")
+    rows = minhash_near_dup_pairs(docs, "text", "doc_id", 0.8).collect()
+    got = [(r.id_a, r.id_b) for r in rows]
+    assert len(got) == len(set(got))
+    groups = [(4, 11, 17), (2, 9), (6, 13, 20)]
+    star = {(g[0], d) for g in groups for d in g[1:]}
+    near = {
+        (min(a, b), max(a, b))
+        for i, ga in enumerate(groups)
+        for gb in groups[i + 1:]
+        for a in ga
+        for b in gb
+    }
+    assert set(got) == star | near
+    assert all(r.jaccard == 1.0 for r in rows if (r.id_a, r.id_b) in star)
+
+
+def test_dedup_documents_job_count(spark):
+    """``dedup_documents`` on a fixed fixture: building the plan (LSH
+    posting and encoding checkpoints, the star loop over the prefix
+    pairs) and running it take at most 19 Spark jobs (measured 19 at
+    shuffle partitions 2 and 8, three runs each)."""
+    from knowledge_harvest_from_lms_spark.operators.dedup import dedup_documents
+
+    docs = spark.createDataFrame(_PLANTED, "doc_id long, text string")
+    docs = docs.localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "dedup-documents-jobs"
+    sc.setJobGroup(group, "dedup_documents")
+    try:
+        rows = dedup_documents(docs, "text", "doc_id", 0.8).collect()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {r.doc_id: r.canonical_id for r in rows}
+    assert got == {d: (30 if d == 30 else 2) for d, _ in _PLANTED}
+    assert len(jobs) <= 19
 
 
 def test_paragraph_dedup_across_docs(spark):

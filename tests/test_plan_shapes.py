@@ -217,22 +217,29 @@ def test_q92_simhash_plan_is_pure_jvm(spark):
 
 
 def test_q37_cluster_plan_shuffles_ids_only(spark):
-    """Exact-dup cluster decisions: the edge stage is a single window
-    over prefix groups with no Python nodes. (The final q37 df joins
-    the documents to a checkpointed-RDD scan — the star loop behind
-    canonical_map localCheckpoints each round — so the shape guard
-    targets the edge stage plan, which is what runs against the
-    corpus.)"""
+    """Exact-dup cluster decisions, the whole q37 plan: one window over
+    the 512-char prefix, no Python nodes and no checkpoint scan — no
+    component loop runs, so building the plan runs no Spark job."""
     from pyspark.sql import functions as F
 
-    from knowledge_harvest_from_lms_spark.operators.dedup import exact_dup_star_edges
+    from knowledge_harvest_from_lms_spark.operators.dedup import dedup_documents_exact
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", F.col("text")
     )
-    plan = plan_of(exact_dup_star_edges(docs, "text", "doc_id"))
+    sc = spark.sparkContext
+    group = "q37-plan-build"
+    sc.setJobGroup(group, "dedup_documents_exact")
+    try:
+        df = dedup_documents_exact(docs, "text", "doc_id")
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    plan = plan_of(df)
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert node not in plan, node
+    assert "ExistingRDD" not in plan  # no localCheckpoint scan
     assert "Window" in plan  # prefix-group min
     # shuffle carries the 512-char prefix key, not full bodies: the
     # window partitions by the substring projection
@@ -537,7 +544,7 @@ def _filters_with_transform(df) -> list[str]:
 
 def test_similarity_gram_explodes_infer_no_transform_filter(spark):
     """The gram arrays of the LSH posting stream and of setsim's
-    ordered sets are exploded as expressions: exploding a named column
+    token stream are exploded as expressions: exploding a named column
     makes the optimizer infer a size(...) > 0 Filter, into which
     pushdown substitutes the gram transform — a second evaluation of
     every gram array (and, for q73/q80, of the 120-char substring
@@ -545,7 +552,10 @@ def test_similarity_gram_explodes_infer_no_transform_filter(spark):
     from pyspark.sql import functions as F
 
     from knowledge_harvest_from_lms_spark.operators.graph import _gram_postings
-    from knowledge_harvest_from_lms_spark.operators.setsim import _ordered_sets
+    from knowledge_harvest_from_lms_spark.operators.setsim import (
+        containment_join,
+        setsim_self_join,
+    )
     from knowledge_harvest_from_lms_spark.plans.queries import _head_grams
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
@@ -554,4 +564,5 @@ def test_similarity_gram_explodes_infer_no_transform_filter(spark):
 
     pre, g = _head_grams(docs, 120, "doc_id")
     grams = pre.select("doc_id", g.alias("g"))
-    assert _filters_with_transform(_ordered_sets(grams, "doc_id", "g")) == []
+    for join in (setsim_self_join, containment_join):
+        assert _filters_with_transform(join(grams, "doc_id", "g", 0.5)) == []
